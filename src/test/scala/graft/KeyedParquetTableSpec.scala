@@ -1974,6 +1974,159 @@ class KeyedParquetTableSpec extends SparkSpec {
     assert(t.read().count() === 5L)
   }
 
+  /** Every message along a throwable's cause chain (Spark wraps task
+    * failures, so a CHECK violation's text sits on a nested cause). */
+  private def causeChain(x: Throwable): String =
+    if (x == null) "" else Option(x.getMessage).getOrElse("") + causeChain(x.getCause)
+
+  test("staged commits enforce CHECK constraints and pin a file-less " +
+    "snapshot's schema, exactly like commit()") {
+    val bad = Seq((9L, -5.0)).toDF("id", "score")
+    for (buckets <- Seq(4, 0)) {
+      val t = new KeyedParquetTable(spark, tmpDir(s"kpt_stage_ck$buckets"),
+        Seq("id"), Nil, buckets)
+      t.commit(Seq((1L, 10.0)).toDF("id", "score"))
+      t.addConstraint("non_neg", "score >= 0")
+      val v0 = t.currentVersion
+      val refused = Seq[(String, () => Long)](
+        "merge" -> (() => t.merge(bad.withColumn("operation", lit("u")))),
+        "stageCommit" -> (() => t.publishStaged(t.stageCommit(bad))),
+        "stageMerge" -> (() =>
+          t.publishStaged(t.stageMerge(bad.withColumn("operation", lit("u"))))))
+      refused.foreach { case (kind, run) =>
+        val e = intercept[Exception] { run() }
+        assert(causeChain(e).contains("non_neg"), s"$kind, bucketCount=$buckets")
+        assert(t.currentVersion === v0 && t.read().count() === 1L,
+          s"$kind published a violating row, bucketCount=$buckets")
+      }
+      // the failed attempts left no fence behind: a passing stage publishes
+      t.publishStaged(t.stageCommit(Seq((1L, 10.0), (2L, 0.0)).toDF("id", "score")))
+      assert(t.read().count() === 2L)
+    }
+    // an empty frame on a bucketed layout writes no parquet file; the
+    // staged snapshot must pin the layout schema as commit() does
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(Seq(StructField("id", LongType), StructField("score", DoubleType))))
+    val b = new KeyedParquetTable(spark, tmpDir("kpt_stage_empty"), Seq("id"), Nil, 4)
+    b.commit(empty)
+    assert(b.read().count() === 0L)
+    val staged = b.stageCommit(empty)
+    assert(b.readStaged(staged).count() === 0L)
+    assert(b.readStaged(staged).columns.toSeq === Seq("id", "score"))
+    b.publishStaged(staged)
+    assert(b.read().count() === 0L)
+  }
+
+  test("compaction enforces a CHECK constraint added with validate = false, " +
+    "bucketed or not") {
+    for (buckets <- Seq(2, 0)) {
+      val t = new KeyedParquetTable(spark, tmpDir(s"kpt_compact_ck$buckets"),
+        Seq("id"), Nil, buckets)
+      t.commit((1L to 20L).map(i => (i, -i.toDouble)).toDF("id", "score"))
+      t.append((21L to 40L).map(i => (i, -i.toDouble)).toDF("id", "score"))
+      t.addConstraint("non_neg", "score >= 0", validate = false)
+      val v0 = t.currentVersion
+      val e = intercept[Exception] { t.compact(minInputFiles = 1) }
+      assert(causeChain(e).contains("non_neg"), s"bucketCount=$buckets")
+      assert(t.currentVersion === v0 && t.read().count() === 40L)
+    }
+  }
+
+  test("branches, clones and rebucketed copies keep sumCols; fastForward " +
+    "keeps the sm_ stats column") {
+    val t = new KeyedParquetTable(spark, tmpDir("kpt_sumcols_fork"), Seq("id"),
+      Nil, 4, sumCols = Seq("score"))
+    t.commit((1L to 10L).map(i => (i, i.toDouble)).toDF("id", "score"))
+    def total(x: KeyedParquetTable): Double = x.sumOf("score").head.getDouble(0)
+    assert(total(t.createBranch("b")) === 55.0)
+    assert(total(t.cloneTo(tmpDir("kpt_sumcols_clone"))) === 55.0)
+    assert(total(t.rebucketTo(tmpDir("kpt_sumcols_rebkt"), 8)) === 55.0)
+    t.branch("b").merge(Seq((11L, 11.0, "u")).toDF("id", "score", "operation"))
+    t.fastForward("b")
+    assert(t.statsIndexColumns.contains("sm_score"))
+    assert(total(t) === 66.0)
+  }
+
+  test("every commit kind keeps the commit invariants: no claim left, " +
+    "commit stamp, carried schema, txn ledger, stats index, CHECK guard") {
+    import java.nio.file.{Files, Paths}
+    // start: an evolved schema (_schema.json pinned), a structured txn
+    // marker in the _txns ledger, a sumCols stats index, a CHECK constraint
+    def fixture(buckets: Int): KeyedParquetTable = {
+      val t = new KeyedParquetTable(spark, tmpDir(s"kpt_inv$buckets"), Seq("id"),
+        Nil, buckets, sumCols = Seq("score"))
+      t.commit((1L to 40L).map(i => (i, i.toDouble)).toDF("id", "score"),
+        Some("app#1"))
+      t.addColumn("note", StringType)
+      t.addConstraint("non_neg", "score >= 0")
+      t
+    }
+    // rows shaped like the table's current schema, each scoring `score`
+    def rows(t: KeyedParquetTable, ids: Seq[Long], score: Double) =
+      ids.toDF("id").select(t.read().schema.fields.toIndexedSeq.map(f => f.name match {
+        case "id"    => col("id")
+        case "score" => lit(score).as("score")
+        case n       => lit("x").cast(f.dataType).as(n)
+      }): _*)
+    def upserts(t: KeyedParquetTable, ids: Seq[Long], score: Double) =
+      rows(t, ids, score).withColumn("operation", lit("u"))
+    // full = the kind rewrites every file, so the evolved columns live in
+    // the files and no declared schema is carried; writesRows = the kind
+    // takes caller rows, which must pass the CHECK constraint
+    case class Kind(name: String, buckets: Int, full: Boolean, writesRows: Boolean,
+                    run: (KeyedParquetTable, Double) => Any)
+    val kinds = Seq(
+      Kind("merge (scoped)", 4, full = false, writesRows = true,
+        (t, s) => t.merge(upserts(t, Seq(1L, 41L), s))),
+      Kind("replaceBuckets", 4, full = false, writesRows = true, { (t, s) =>
+        val b = t.bucketsFor(Seq(2L).toDF("id"))
+        t.replaceBuckets(t.readBuckets(b).filter(col("id") =!= 2L)
+          .unionByName(rows(t, Seq(2L), s)), b)
+      }),
+      Kind("append", 4, full = false, writesRows = true,
+        (t, s) => t.append(rows(t, Seq(50L, 51L), s))),
+      Kind("deleteKeys", 4, full = false, writesRows = false,
+        (t, _) => t.deleteKeys(Seq(3L).toDF("id"))),
+      Kind("addColumn", 4, full = false, writesRows = false,
+        (t, _) => t.addColumn("extra", StringType)),
+      Kind("compact", 4, full = false, writesRows = false,
+        (t, _) => assert(t.compact(minInputFiles = 1).isDefined)),
+      Kind("fastForward", 4, full = false, writesRows = false, { (t, _) =>
+        t.createBranch("b").merge(upserts(t, Seq(4L), 4.0))
+        t.fastForward("b")
+      }),
+      Kind("stageCommit + publishStaged", 4, full = true, writesRows = true,
+        (t, s) => t.publishStaged(t.stageCommit(
+          t.read().unionByName(rows(t, Seq(60L), s)), Some("other#1")))),
+      Kind("commit", 4, full = true, writesRows = true,
+        (t, s) => t.commit(t.read().unionByName(rows(t, Seq(61L), s)),
+          Some("other#2"))),
+      Kind("merge (unbucketed)", 0, full = true, writesRows = true,
+        (t, s) => t.merge(upserts(t, Seq(1L, 41L), s))))
+    val tables = scala.collection.mutable.Map.empty[Int, KeyedParquetTable]
+    kinds.foreach { k =>
+      val t = tables.getOrElseUpdate(k.buckets, fixture(k.buckets))
+      val clue = s"after ${k.name}"
+      if (k.writesRows) {
+        val v0 = t.currentVersion
+        val e = intercept[Exception] { k.run(t, -5.0) }
+        assert(causeChain(e).contains("non_neg"), clue)
+        assert(t.currentVersion === v0, clue)
+      }
+      k.run(t, 5.0)
+      val root = Paths.get(t.root)
+      val dir = root.resolve(s"v${t.currentVersion}")
+      assert(!Files.list(root).iterator.asScala
+        .exists(_.getFileName.toString.startsWith("_commit.")), clue)
+      assert(Files.exists(dir.resolve("_committed_at")), clue)
+      assert(Files.exists(dir.resolve("_schema.json")) === !k.full, clue)
+      assert(t.read().columns.contains("note"), clue)
+      assert(t.txnLedger.get("app") === Some(1L), clue)
+      assert(t.statsIndexColumns.contains("sm_score"), clue)
+    }
+  }
+
   test("syncInto replays the changelog into a differently-bucketed target") {
     val src = new KeyedParquetTable(spark, tmpDir("kpt_sync_src"), Seq("id"), Nil, 4)
     src.append((1L to 60L).map(i => (i, s"v$i")).toDF("id", "v"))

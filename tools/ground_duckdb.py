@@ -88,7 +88,9 @@ def main():
         "n_queries": len(per_query),
         "spark_total_sec": round(spark_total, 3),
         "duckdb_total_sec": round(duck_total, 3),
-        "ratio_spark_over_duckdb": round(spark_total / duck_total, 3),
+        # null when no query compared (all failed, or no common set)
+        "ratio_spark_over_duckdb": (round(spark_total / duck_total, 3)
+                                    if duck_total > 0 else None),
         "threads": 32,
         "duckdb_version": duckdb.__version__,
         "n_runs_per_query": N_RUNS,

@@ -178,54 +178,27 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     val dir = tablePath(ident)
     if (Files.exists(metaFile(dir))) throw new TableAlreadyExistsException(ident)
     if (viewExists(ident)) throw new ViewAlreadyExistsException(ident)
-    val probe = new KeyedParquetTable(spark, location, declaredKeys,
-      partitionBy, declaredBuckets.map(_._1).getOrElse(0))
-    require(probe.exists,
-      s"register: $location is not an engine table root (no snapshot)")
-    val rp = probe.properties
-    def agree(what: String, pinnedV: Option[String], declaredV: Option[String]): String =
-      (pinnedV, declaredV) match {
-        case (Some(p), Some(d)) =>
-          require(p == d, s"register ${fullName(ident)}: declared $what '$d' " +
-            s"conflicts with the root's pinned $what '$p'")
-          p
-        case (Some(p), None) => p
-        case (None, Some(d)) => d // legacy unpinned root: trust the caller
-        case (None, None) => ""
-      }
-    val keys = agree("keys", rp.get("graft.layout.keys"),
-      Option(declaredKeys.mkString(",")).filter(_.nonEmpty))
-    val bucketCount = agree("bucket count", rp.get("graft.layout.bucket-count"),
-      declaredBuckets.map(_._1.toString))
-    val bucketBy = agree("bucket keys", rp.get("graft.layout.bucket-keys"),
-      declaredBuckets.map(_._2.mkString(",")))
-    val partBy = agree("partitionBy", rp.get("graft.layout.partition-by"),
-      Option(partitionBy.mkString(",")).filter(_.nonEmpty))
-    // LEGACY roots predate partition-by pinning: a partitioned root
-    // registered without declaring its partitionBy would take later writes
-    // in a MIXED layout; detect the physical dirs and refuse rather than
-    // corrupt (pinned roots are covered by the agree() above)
-    if (partBy.isEmpty && probe.currentVersion >= 0) {
-      val vd = Paths.get(location).resolve(s"v${probe.currentVersion}")
-      def hasValueDirs(p: Path): Boolean = Files.isDirectory(p) && {
-        val s = Files.list(p)
-        try s.iterator().asScala.exists { c =>
-          val n = c.getFileName.toString
-          if (n.startsWith("__bucket=")) hasValueDirs(c)
-          else Files.isDirectory(c) && n.contains("=")
-        } finally s.close()
-      }
-      require(!hasValueDirs(vd),
-        s"register ${fullName(ident)}: $location carries identity-partition " +
-          "directories — declare the same PARTITIONED BY columns (identity " +
-          "transforms) at registration or later writes would mix layouts")
+    // opens with the layout the root pinned and refuses a root in any
+    // other format; a declared layout must agree with the pinned one
+    val kpt = KeyedParquetTable.openRoot(spark, location)
+    def agree(what: String, pinned: Seq[String], declared: Seq[String]): String = {
+      require(declared.isEmpty || declared == pinned,
+        s"register ${fullName(ident)}: declared $what '${declared.mkString(",")}' " +
+          s"conflicts with the root's pinned $what '${pinned.mkString(",")}'")
+      pinned.mkString(",")
     }
+    val keys = agree("keys", kpt.keys, declaredKeys)
+    val bucketCount = agree("bucket count", Seq(kpt.bucketCount.toString),
+      declaredBuckets.map(_._1.toString).toSeq)
+    val bucketBy = agree("bucket keys", kpt.bucketKeys,
+      declaredBuckets.map(_._2).getOrElse(Nil))
+    val partBy = agree("partitionBy", kpt.partitionBy, partitionBy)
     Files.createDirectories(dir)
     writeMeta(dir, Map(
       "location" -> Paths.get(location).toAbsolutePath.normalize.toString,
       "keys" -> keys,
       "partitionBy" -> partBy,
-      "bucketCount" -> (if (bucketCount.isEmpty) "0" else bucketCount),
+      "bucketCount" -> bucketCount,
       "bucketBy" -> bucketBy,
       "statsCols" -> statsCols.mkString(","),
       "bloomKeyBits" -> bloomKeyBits.toString,

@@ -180,31 +180,36 @@ final class GraftScanBuilder(table: GraftTable)
   private val kpt = table.kpt
   private var pushed: Array[Filter] = Array.empty
   private var required: Option[StructType] = None
-  private var pushedAgg: Option[org.apache.spark.sql.connector.expressions.aggregate.Aggregation] = None
+  /** The aggregation last offered for pushdown and the stats kernel's
+    * answer to it ([[KeyedParquetTable.statsAggregate]]; None = declined).
+    * Spark offers the same aggregation to [[supportCompletePushDown]] and
+    * [[pushAggregation]], so the kernel is planned once per offer.
+    */
+  private var offered: (AnyRef, Option[DataFrame]) = (null, None)
+  private var pushedAgg: Option[DataFrame] = None
 
   /** COMPLETE aggregate pushdown into the engine's O(metadata) stats-index
-    * aggregates: `SELECT COUNT(*) / MIN / MAX / SUM FROM graft.ns.t` as
-    * literal SQL answers from the transactional `_stats` index
-    * ([[KeyedParquetTable.countRows]]/[[KeyedParquetTable.minMaxOf]]/
-    * [[KeyedParquetTable.sumOf]] — per-file n_rows/bounds/sums written
-    * atomically with every commit; pending MoR deletes go hybrid) — data
-    * files never open. Spark only offers aggregates when every filter was
-    * consumed, and this builder returns ALL filters as residuals, so the
-    * offer arrives exactly for the unfiltered whole-table shape the index
-    * answers. Anything the index can't answer exactly (group-by, DISTINCT,
-    * Count(col) — null counts aren't indexed — min/max off statsCols, sum
-    * off sumCols, a time-travel pin) declines and Spark aggregates the
-    * ordinary scan.
+    * aggregates: `SELECT COUNT(*) / COUNT(c) / MIN / MAX / SUM FROM
+    * graft.ns.t` as literal SQL answers from the transactional `_stats`
+    * index ([[KeyedParquetTable.statsAggregate]] — per-file n_rows, null
+    * counts, bounds and sums written atomically with every commit;
+    * pending MoR deletes go hybrid) — data files never open. Spark only
+    * offers aggregates when every filter was consumed, and this builder
+    * returns ALL filters as residuals, so the offer arrives exactly for the
+    * unfiltered whole-table shape the index answers. Anything the index
+    * can't answer exactly (group-by, DISTINCT, COUNT/MIN/MAX off
+    * statsCols, SUM off sumCols or of a DECIMAL, a time-travel pin, an
+    * index lacking a needed column, delete debt past the plan-time bound)
+    * declines and Spark aggregates the ordinary scan.
     */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    answerable(agg)
+    answer(agg).isDefined
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    val ok = answerable(agg)
-    if (ok) pushedAgg = Some(agg)
-    ok
+    pushedAgg = answer(agg)
+    pushedAgg.isDefined
   }
 
   private def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
@@ -214,87 +219,45 @@ final class GraftScanBuilder(table: GraftTable)
       case _ => None
     }
 
-  private def answerable(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
+  /** The stats kernel's plan-time answer to `agg` (it runs at PLAN time,
+    * so a shape that would need a data scan declines instead). */
+  private def answer(
+      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Option[DataFrame] = {
     import org.apache.spark.sql.connector.expressions.aggregate._
-    // the index must actually be able to answer WITHOUT a scan: these
-    // lookups run at PLAN time, so any minMaxOf/countRows scan fallback
-    // (index-less table, flat delete set, stale index missing a column)
-    // would execute a full table scan inside query planning — decline
-    // and let the ordinary scan+agg run at execution instead
-    table.isCurrent && pushed.isEmpty && agg.groupByExpressions.isEmpty &&
-      agg.aggregateExpressions.nonEmpty && kpt.statsAggregatable && {
-        lazy val indexed = kpt.statsIndexColumns.toSet
-        // statsAggregatable already passed, so an EMPTY index set means a
-        // file-less table — the aggregate over zero files is scan-free
-        def covered(c: String, prefixes: String*) =
-          indexed.isEmpty || prefixes.forall(p => indexed.contains(p + c))
-        agg.aggregateExpressions.forall {
-          case _: CountStar => true
-          case m: Min => fieldOf(m.column).exists(c =>
-            kpt.statsCols.contains(c) && covered(c, "mn_", "mx_"))
-          case m: Max => fieldOf(m.column).exists(c =>
-            kpt.statsCols.contains(c) && covered(c, "mn_", "mx_"))
-          // COUNT(col): Σ n_rows − Σ nl_<col> — needs the null counts the
-          // index carries since they joined the stats schema; a stale
-          // pre-upgrade index (no nl_) declines rather than scans
-          case n: Count => !n.isDistinct && fieldOf(n.column).exists(c =>
-            kpt.statsCols.contains(c) && covered(c, "nl_"))
-          // Sum of a DECIMAL declines: sumOf's result schema is the
-          // sum-of-sum-partials type (precision widened TWICE), which
-          // disagrees with Spark's expected Sum result type for the column
-          // — the complete-pushdown scan schema would mismatch. Integral
-          // (long) and floating (double) sums match exactly.
-          case s: Sum => !s.isDistinct && fieldOf(s.column).exists(c =>
-            kpt.sumCols.contains(c) && covered(c, "sm_") &&
-              !table.schema(c).dataType
-                .isInstanceOf[org.apache.spark.sql.types.DecimalType])
-          case _ => false
+    def on(f: String, e: org.apache.spark.sql.connector.expressions.Expression,
+           cover: Seq[String]) = fieldOf(e).filter(cover.contains).map(f -> _)
+    if (offered._1 ne agg) offered = (agg,
+      if (!table.isCurrent || pushed.nonEmpty || agg.groupByExpressions.nonEmpty) None
+      else {
+        val pairs = agg.aggregateExpressions.toSeq.map {
+          case _: CountStar => Some("count" -> "*")
+          case n: Count if !n.isDistinct => on("count", n.column, kpt.statsCols)
+          case m: Min => on("min", m.column, kpt.statsCols)
+          case m: Max => on("max", m.column, kpt.statsCols)
+          // Sum of a DECIMAL declines: the index sums the sum partials, whose
+          // type (precision widened TWICE) disagrees with Spark's expected Sum
+          // result type for the column — the complete-pushdown scan schema
+          // would mismatch. Integral (long) and floating (double) sums match.
+          case s: Sum if !s.isDistinct => on("sum", s.column, kpt.sumCols).filterNot(p =>
+            table.schema(p._2).dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType])
+          case _ => None
         }
-      }
+        if (pairs.isEmpty || pairs.contains(None)) None
+        else kpt.statsAggregate(pairs.flatten, planTime = true)
+      })
+    offered._2
   }
 
-  /** Answer the pushed aggregation as a one-row local frame (the complete-
-    * pushdown contract: the scan IS the final result). Each value comes
-    * from the corresponding O(metadata) table API; column types match
-    * Spark's own aggregate result types because min/max carry the column
-    * type and sumOf runs Spark's sum over index partials.
+  /** The pushed aggregation's answer as a one-row local frame (the
+    * complete-pushdown contract: the scan IS the final result), typed as
+    * Spark's own aggregate results — count long, min/max the column type,
+    * sum the kernel's sum over index partials.
     */
-  private def answeredFrame(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): DataFrame = {
-    import org.apache.spark.sql.connector.expressions.aggregate._
-    // one index job per DISTINCT source (count, per-column min/max row,
-    // per-column sum): SELECT MIN(c), MAX(c) must not run the stats job
-    // twice — and on the index-less fallback each run is a full scan
-    lazy val countOnce = kpt.countRows()
-    val countColOnce = collection.mutable.Map.empty[String, Long]
-    def countCol(c: String) = countColOnce.getOrElseUpdate(c, kpt.countOf(c))
-    val minMaxOnce = collection.mutable.Map.empty[String, org.apache.spark.sql.Row]
-    def minMaxRow(c: String) = minMaxOnce.getOrElseUpdate(c, kpt.minMaxOf(c).head())
-    val sumOnce = collection.mutable.Map.empty[String, (Any, org.apache.spark.sql.types.DataType)]
-    def sumVal(c: String) = sumOnce.getOrElseUpdate(c, {
-      val df = kpt.sumOf(c)
-      (df.head().get(0), df.schema.head.dataType)
-    })
-    val cols: Seq[(String, Column)] = agg.aggregateExpressions.toSeq.zipWithIndex.map {
-      case (_: CountStar, i) => (s"count_star_$i", lit(countOnce))
-      case (n: Count, i) =>
-        val c = fieldOf(n.column).get
-        (s"count_${c}_$i", lit(countCol(c)))
-      case (m: Min, i) =>
-        val c = fieldOf(m.column).get
-        (s"min_${c}_$i", lit(minMaxRow(c).get(0)).cast(table.schema(c).dataType))
-      case (m: Max, i) =>
-        val c = fieldOf(m.column).get
-        (s"max_${c}_$i", lit(minMaxRow(c).get(1)).cast(table.schema(c).dataType))
-      case (s: Sum, i) =>
-        val c = fieldOf(s.column).get
-        val (v, dt) = sumVal(c)
-        (s"sum_${c}_$i", lit(v).cast(dt))
-      case (other, _) => throw new IllegalStateException(
-        s"pushAggregation accepted an unanswerable function $other")
-    }
-    kpt.spark.range(1).select(cols.map { case (n, c) => c.as(n) }: _*)
+  private def answeredFrame(stats: DataFrame): DataFrame = {
+    val row = stats.head()
+    kpt.spark.range(1).select(stats.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      lit(row.get(i)).cast(f.dataType).as(s"${f.name}_$i")
+    }: _*)
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -359,8 +322,8 @@ final class GraftScanBuilder(table: GraftTable)
   }
 
   override def build(): Scan = {
-    pushedAgg.foreach { agg =>
-      return new GraftScan(answeredFrame(agg), "stats-aggregate", pushed)
+    pushedAgg.foreach { stats =>
+      return new GraftScan(answeredFrame(stats), "stats-aggregate", pushed)
     }
     val (base, pruneMode) = prunedBase()
     // re-apply translatable predicates inside the inner plan: Catalyst

@@ -3,7 +3,7 @@ package graft.cdc
 import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Snapshot-versioned keyed table over parquet — the engine's stand-in for
@@ -38,6 +38,18 @@ import org.apache.spark.sql.functions._
   * `_schema.json` (declared schema), `_txn`/`_txns` (replay markers) and
   * `_committed_at` (commit time), beside the `_stats` index and the
   * `_deletes` set; [[rollbackTo]] is the one pointer move outside it.
+  *
+  * On-disk format: a root holds `_latest`, `_properties` and one `v{N}`
+  * directory per retained snapshot. A bucketed snapshot keeps its data
+  * under `__bucket=K/` (then any partition directories) and its pending
+  * deletes under `_deletes/__dbucket=K/`; an unbucketed one keeps data at
+  * the top level (or under its partition directories) and one flat
+  * `_deletes` set. The `graft.layout.*` pins that the first commit writes
+  * into `_properties` are the format marker. A root that has a snapshot
+  * but no pins, or a bucketed root whose current snapshot holds
+  * top-level parquet files or a flat delete set, is refused by every
+  * commit, bucket-scoped read, [[KeyedParquetTable.openRoot]] and
+  * catalog registration. Migrate such a root by `read()` into a new root.
   *
   * Maintenance parity (M1-M3, `spark_batch.py:408-432`):
   * [[compact]] ~ `rewrite_data_files`, [[expireSnapshots]] ~
@@ -421,9 +433,9 @@ final class KeyedParquetTable(
     * can match a probe key — a maintainer that must see EVERY row of a
     * bucket (fold-and-replace) uses [[readBuckets]] instead.
     *
-    * Falls back to a full [[read]] for unbucketed tables and for flat
-    * layouts written by a foreign writer. The pruning is physical — the
-    * scan is constructed from the touched buckets' directories only, so no
+    * Falls back to a full [[read]] for unbucketed tables. The pruning is
+    * physical — the scan is constructed from the touched buckets'
+    * directories only, so no
     * optimizer pushdown has to cooperate for the I/O bound to hold.
     */
   def readForKeys(keysDf: DataFrame): DataFrame = readForKeys(keysDf, None)
@@ -444,10 +456,10 @@ final class KeyedParquetTable(
     val curDir = versionDir(v)
     val bucketDirs = listEntries(curDir).filter(p => Files.isDirectory(p) &&
       p.getFileName.toString.startsWith("__bucket="))
-    if (bucketDirs.isEmpty) return read() // flat/foreign layout: no bucket dirs
+    if (bucketDirs.isEmpty) return read() // file-less snapshot
     val touched = knownBuckets.getOrElse(bucketsFor(keysDf))
     val chosen = bucketDirs.filter { p =>
-      p.getFileName.toString.stripPrefix("__bucket=").toIntOption.exists(touched)
+      bucketIdOf(p).exists(touched)
     }
     if (chosen.isEmpty) read().limit(0)
     else statsKeyPrunedFiles(keysDf, touched, curDir) match {
@@ -492,7 +504,7 @@ final class KeyedParquetTable(
     require(bucketCount > 0, "readBuckets requires a bucketed table")
     val curDir = versionDir(v)
     val chosen = bucketDirsOf(curDir).filter { p =>
-      p.getFileName.toString.stripPrefix("__bucket=").toIntOption.exists(buckets)
+      bucketIdOf(p).exists(buckets)
     }
     if (chosen.isEmpty) read().limit(0)
     else applyDeletes(scanDeclared(snapshotSchema(curDir),
@@ -526,75 +538,37 @@ final class KeyedParquetTable(
     // content depends only on B's data files and B's shard (the pmod
     // sharding guarantees B's delete keys live nowhere else) — so a
     // delete-heavy table keeps O(changed buckets) changelogs: the diff
-    // scope is (data-changed ∪ shard-changed) buckets. Flat sets (or a
-    // filesystem without stable fileKeys) can't attribute keys to buckets;
-    // there the old all-or-nothing rule applies — identical set → scope by
-    // data identity, differing set → full keyed diff (exact, unpruned).
+    // scope is (data-changed ∪ shard-changed) buckets. A snapshot whose
+    // set is not sharded (or a filesystem without stable fileKeys) cannot
+    // attribute keys to buckets; there the diff runs over the full table
+    // (exact, unpruned).
     def fileKeysOf(d: Path): Set[Object] =
       walkEntries(d).filter(p => Files.isRegularFile(p) &&
           p.toString.endsWith(".parquet"))
         .map(p => Files.readAttributes(p,
           classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey)
         .toSet
-    // per-bucket delete-shard identity; None when not attributable
-    def delShardIdentity(v: Long): Option[Map[Int, Set[Object]]] = {
-      val dir = versionDir(v)
-      if (!hasDeletes(dir)) Some(Map.empty)
-      else {
-        val del = deletesDirOf(dir)
-        val shards = deleteShardDirs(del)
-        val hasFlatFiles = walkEntries(del).exists(p =>
-          Files.isRegularFile(p) && p.toString.endsWith(".parquet") &&
-            !del.relativize(p).iterator().asScala
-              .exists(_.getFileName.toString.startsWith(s"$DelBucketCol=")))
-        if (shards.isEmpty || hasFlatFiles) None
-        else {
-          val m = shards.map(s => (shardIdOf(s), fileKeysOf(s)))
-          if (m.exists(e => e._1.isEmpty || e._2.contains(null))) None
-          else Some(m.map(e => e._1.get -> e._2).toMap)
-        }
-      }
+    // bucket id → file-identity set of the bucket's data or delete-shard
+    // dirs; None when identity can't be attested (an unparsable dir name,
+    // or a filesystem without fileKey)
+    def identities(dirs: Seq[Path], id: Path => Option[Int]): Option[Map[Int, Set[Object]]] = {
+      val m = dirs.map(d => (id(d), fileKeysOf(d)))
+      if (m.exists(e => e._1.isEmpty || e._2.contains(null))) None
+      else Some(m.map(e => e._1.get -> e._2).toMap)
     }
-    // whole-set identity, the flat-layout fallback comparison
-    def delIdentity(v: Long): Option[Set[Object]] = {
-      val d = deletesDirOf(versionDir(v))
-      if (!Files.exists(d)) Some(Set.empty)
-      else { val ks = fileKeysOf(d); if (ks.contains(null)) None else Some(ks) }
-    }
-    // delete contribution to the scope: Some(buckets) when attributable,
-    // Some(empty) when provably identical, None → full diff required
-    val delScope: Option[Set[Int]] =
-      (delShardIdentity(fromVersion), delShardIdentity(toVersion)) match {
-        case (Some(da), Some(db)) =>
-          Some((da.keySet ++ db.keySet).filter(k => da.get(k) != db.get(k)))
-        case _ =>
-          (delIdentity(fromVersion), delIdentity(toVersion)) match {
-            case (Some(a), Some(b)) if a == b => Some(Set.empty)
-            case _                            => None
-          }
-      }
+    def changed(v: Long => Option[Map[Int, Set[Object]]]): Option[Set[Int]] =
+      for (a <- v(fromVersion); b <- v(toVersion))
+        yield (a.keySet ++ b.keySet).filter(k => a.get(k) != b.get(k))
     val scopedBuckets: Option[Set[Int]] =
-      if (bucketCount <= 0 || delScope.isEmpty) None
-      else {
-        // bucket id → file-identity set; None when identity can't be
-        // attested (flat/foreign layout, or a filesystem without fileKey)
-        def identities(v: Long): Option[Map[Int, Set[Object]]] = {
-          val dirs = bucketDirsOf(versionDir(v))
-          if (dirs.isEmpty) return None
-          val m = dirs.map { d =>
-            val b = d.getFileName.toString.stripPrefix("__bucket=").toIntOption
-            (b, fileKeysOf(d))
-          }
-          if (m.exists(e => e._1.isEmpty || e._2.contains(null))) None
-          else Some(m.map(e => e._1.get -> e._2).toMap)
+      if (bucketCount <= 0) None
+      else for {
+        data <- changed(v => identities(bucketDirsOf(versionDir(v)), bucketIdOf))
+        dels <- changed { v =>
+          val shards = deleteShardDirs(deletesDirOf(versionDir(v)))
+          if (shards.isEmpty && hasDeletes(versionDir(v))) None // not sharded
+          else identities(shards, shardIdOf)
         }
-        (identities(fromVersion), identities(toVersion)) match {
-          case (Some(fa), Some(fb)) =>
-            Some((fa.keySet ++ fb.keySet).filter(k => fa.get(k) != fb.get(k)) ++
-              delScope.get)
-          case _ => None
-        }
-      }
+      } yield data ++ dels
     // a FILE-LESS snapshot (createIfNotExists's empty bucketed commit, or a
     // rewrite that deleted every row) has no parquet footers to infer a
     // schema from — the diff degenerates: empty base → every current row
@@ -1129,7 +1103,9 @@ final class KeyedParquetTable(
   // of a root (Iceberg treats bucket-spec changes as partition-spec
   // evolution; here the sanctioned migration is read() into a new root).
   // statsCols/bloomKeyBits are deliberately NOT pinned — the index
-  // rebuilds itself on change (see [[refreshStats]] carry rules).
+  // rebuilds itself on change (see [[refreshStats]] carry rules). The pins
+  // are also the on-disk format marker (class doc): [[ensureLayout]] is
+  // the one check that refuses a root in any other format.
   private val layoutProps: Map[String, String] = Map(
     "graft.layout.keys" -> keys.mkString(","),
     "graft.layout.bucket-count" -> bucketCount.toString,
@@ -1141,6 +1117,13 @@ final class KeyedParquetTable(
     // scan
     "graft.layout.partition-by" -> partitionBy.mkString(","))
   @volatile private var layoutChecked = false
+
+  /** The format check: refuse a pin mismatch, and refuse a root whose
+    * snapshot is not in the current on-disk format — no pins, or (bucketed)
+    * top-level parquet files or a flat delete set in the current snapshot.
+    * `stamp` (the commit path) pins a root that has no snapshot yet. A
+    * passed check is cached per instance.
+    */
   private def ensureLayout(stamp: Boolean): Unit = {
     if (layoutChecked) return
     val p = properties
@@ -1152,11 +1135,26 @@ final class KeyedParquetTable(
             "for the life of a root (read() into a new root to re-layout)")
       }
     }
-    val pinned = layoutProps.forall { case (k, v) => p.get(k).contains(v) }
-    if (stamp && !pinned) setProperties(layoutProps)
-    // cache only a verified-pinned (or just-stamped) state; an unpinned
-    // legacy table keeps re-checking until some commit stamps it
-    layoutChecked = pinned || stamp
+    val pinned = layoutProps.keys.forall(p.contains)
+    if (exists) {
+      def flatParquet(d: Path): Boolean = Files.isDirectory(d) &&
+        listEntries(d).exists(f => Files.isRegularFile(f) && f.toString.endsWith(".parquet"))
+      val cur = versionDir(currentVersion)
+      val unfit =
+        if (!pinned) Some("it has a snapshot but no graft.layout.* pins")
+        else if (bucketCount > 0 && flatParquet(cur))
+          Some("its bucketed snapshot holds top-level parquet files")
+        else if (bucketCount > 0 && flatParquet(deletesDirOf(cur)))
+          Some("its bucketed snapshot holds a flat delete set")
+        else None
+      unfit.foreach(why => throw new IllegalStateException(
+        s"$root is not in the current on-disk format ($why) — migrate it " +
+          "by read() into a new root"))
+      layoutChecked = true
+    } else if (stamp) {
+      if (!pinned) setProperties(layoutProps)
+      layoutChecked = true
+    }
   }
 
   /** Commit fence, CAS half 1 — claim version `next` BEFORE writing any
@@ -1380,8 +1378,7 @@ final class KeyedParquetTable(
   def mergeMor(source: DataFrame, opCol: String = "operation",
                txn: Option[String] = None, expectedBase: Long = -1L): Long = {
     require(exists, s"mergeMor target $root does not exist")
-    require(bucketCount > 0 && !hasForeignFlatFiles,
-      "mergeMor requires a bucketed engine-layout table — use merge()")
+    require(bucketCount > 0, "mergeMor requires a bucketed table — use merge()")
     val cur = pinBase(expectedBase)
     val curDir = versionDir(cur)
     // checkpoint ONCE: the bucket/op probe, the delete-set write, and the
@@ -1430,19 +1427,6 @@ final class KeyedParquetTable(
     */
   def snapshotHasFiles(v: Long): Boolean =
     v >= 0 && walkParquet(versionDir(v)).nonEmpty
-
-  /** True when the current snapshot holds flat top-level parquet files from
-    * a foreign (non-bucket-aware) writer. Such a snapshot cannot serve the
-    * bucket-scoped read/replace paths — [[readBuckets]] would see no bucket
-    * directories and [[replaceBuckets]] refuses it — so maintainers probe
-    * this once per batch and fall back to the full-merge path. One local
-    * directory listing; no Spark job.
-    */
-  def hasForeignFlatFiles: Boolean = exists && hasFlatFiles(versionDir(currentVersion))
-
-  private def hasFlatFiles(dir: Path): Boolean =
-    Files.exists(dir) && listEntries(dir).exists(p =>
-      Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
 
   /** Base pinning, the step before the [[commitKernel]]: the current
     * snapshot, refused as a lost race unless it is still `expectedBase`
@@ -1528,10 +1512,6 @@ final class KeyedParquetTable(
                           expectedBase: Long = -1L): Long = {
     val cur = pinBase(expectedBase)
     val curDir = versionDir(cur)
-    // flat (non-bucket-partitioned) layout from a foreign writer → full merge
-    if (hasFlatFiles(curDir))
-      return commitInternal(Merge.mergeUpsert(read(), source, keys, opCol), txn,
-        carry = true, base = cur, swing = swing)
     val src = source.withColumn("__bucket", bucketExpr)
     // bounded by bucketCount — driver-safe; a caller-precomputed set skips
     // re-evaluating the source plan just to learn the ids
@@ -1559,8 +1539,7 @@ final class KeyedParquetTable(
     * `content` must hash into `buckets` (a row outside would land in a
     * bucket that ALSO hard-links its old files — duplicated rows), and
     * `content` must be the WHOLE new state of those buckets — rows absent
-    * from it are deletions. Requires a bucketed table with no foreign flat
-    * files.
+    * from it are deletions. Requires a bucketed table.
     */
   def replaceBuckets(content: DataFrame, buckets: Set[Int],
                      txn: Option[String] = None,
@@ -1568,10 +1547,7 @@ final class KeyedParquetTable(
                      align: Boolean = true): Long = {
     require(exists, s"replaceBuckets target $root does not exist")
     require(bucketCount > 0, "replaceBuckets requires a bucketed table")
-    val cur = pinBase(expectedBase)
-    require(!hasFlatFiles(versionDir(cur)),
-      s"replaceBuckets: $root holds flat (unbucketed) files — merge instead")
-    commitScoped(content, buckets, txn, base = cur, align = align)
+    commitScoped(content, buckets, txn, base = pinBase(expectedBase), align = align)
   }
 
   /** Scoped [[commitKernel]] body under [[mergeScoped]]/[[replaceBuckets]]/
@@ -1595,8 +1571,7 @@ final class KeyedParquetTable(
       // the pathological case.
       if (touched.nonEmpty) writeData(content, nextDir, align)
       bucketDirsOf(curDir)
-        .filterNot(_.getFileName.toString.stripPrefix("__bucket=").toIntOption
-          .exists(touched.contains))
+        .filterNot(bucketIdOf(_).exists(touched))
         .foreach(linkTree(curDir, _, nextDir))
       // stats: recollect only the rewritten buckets (a touched bucket whose
       // rows were all deleted writes no dir — nothing to collect for it),
@@ -1667,8 +1642,7 @@ final class KeyedParquetTable(
         }
         writeData(applyDeletes(scanDeclared(snapshotSchema(curDir),
             Some(curDir.toString),
-            bucketDirsOf(curDir).filter(d => d.getFileName.toString
-              .stripPrefix("__bucket=").toIntOption.exists(overlapBuckets))
+            bucketDirsOf(curDir).filter(bucketIdOf(_).exists(overlapBuckets))
               .map(_.toString)),
           curDir, Some(overlapBuckets))
           .repartition(overlapBuckets.size, col("__bucket")), nextDir, align = false)
@@ -1948,9 +1922,8 @@ final class KeyedParquetTable(
     * A delete commit then rewrites only the touched buckets' shard files
     * and hard-links the rest, a bucket rewrite prunes its shard by simply
     * not linking it (zero Spark jobs), and bucket-scoped reads anti-join
-    * only their own shards. Unbucketed tables (and pre-sharding snapshots,
-    * read-compatibly) keep the single flat set; the first delete commit on
-    * a bucketed table converts a flat carried set sharded.
+    * only their own shards. Unbucketed tables keep one flat set; a
+    * bucketed root with a flat set is refused ([[ensureLayout]]).
     */
   private val DelBucketCol = "__dbucket"
 
@@ -1962,22 +1935,38 @@ final class KeyedParquetTable(
   private def shardIdOf(d: Path): Option[Int] =
     d.getFileName.toString.stripPrefix(s"$DelBucketCol=").toIntOption
 
-  private def isSharded(delDir: Path): Boolean = deleteShardDirs(delDir).nonEmpty
+  /** Buckets with pending deletes: the snapshot's shard ids (a directory
+    * listing, no Spark job). */
+  private def debtBuckets(dir: Path): Set[Int] =
+    deleteShardDirs(deletesDirOf(dir)).flatMap(shardIdOf).toSet
+
+  /** Write the incoming shard rows `inc` (keys + [[DelBucketCol]]), merged
+    * with the current shards `hit` of the same buckets, as `nextDel`'s
+    * shards for `buckets` delete buckets. */
+  private def writeShards(inc: DataFrame, hit: Seq[Path], curDel: Path,
+                          nextDel: Path, buckets: Int): Unit = {
+    val merged =
+      if (hit.isEmpty) inc
+      else inc.unionByName(spark.read.option("basePath", curDel.toString)
+        .parquet(hit.map(_.toString): _*)
+        .select((keys.map(col) :+ col(DelBucketCol)): _*)).distinct()
+    merged.repartition(math.max(1, buckets), col(DelBucketCol))
+      .write.mode("append").partitionBy(DelBucketCol).parquet(nextDel.toString)
+  }
 
   private def deleteKeySet(dir: Path): Option[DataFrame] = deleteKeySet(dir, None)
 
   /** The snapshot's pending delete keys, optionally restricted to the given
-    * data buckets: on a sharded set the restriction is PHYSICAL (only those
-    * shards' files are scanned — the delete-side analog of [[readForKeys]]'
-    * bucket pruning); on a flat set it falls back to the whole set, which
-    * is only a superset (the anti-join stays correct, just unpruned).
+    * data buckets of a bucketed table: the restriction is PHYSICAL (only
+    * those shards' files are scanned — the delete-side analog of
+    * [[readForKeys]]' bucket pruning).
     */
   private def deleteKeySet(dir: Path, buckets: Option[Set[Int]]): Option[DataFrame] =
     if (!hasDeletes(dir)) None
     else {
       val del = deletesDirOf(dir)
       buckets match {
-        case Some(bs) if isSharded(del) =>
+        case Some(bs) =>
           val chosen = deleteShardDirs(del).filter(d => shardIdOf(d).exists(bs))
           if (chosen.isEmpty) None
           else Some(spark.read.option("basePath", del.toString)
@@ -2191,8 +2180,7 @@ final class KeyedParquetTable(
     * untouched buckets' shard files hard-link verbatim and only the
     * incoming keys' buckets rewrite — commit cost is O(touched shards +
     * incoming), not O(total pending set), the shape a sustained CDC
-    * tombstone rate needs. A legacy flat carried set converts to shards
-    * on its first delete commit.
+    * tombstone rate needs.
     */
   private def commitDeleteSet(incoming: DataFrame, txn: Option[String],
                               base: Long): Long = {
@@ -2219,31 +2207,10 @@ final class KeyedParquetTable(
         val inc = incoming.select(keys.map(col): _*).distinct()
           .withColumn(DelBucketCol, bucketExpr).localCheckpoint(true)
         val touchedDel = distinctInts(inc.select(col(DelBucketCol)))
-        if (isSharded(curDel)) {
-          val (touchedDirs, intactDirs) = deleteShardDirs(curDel)
-            .partition(d => shardIdOf(d).exists(touchedDel))
-          intactDirs.foreach(linkTree(curDir, _, nextDir))
-          val merged =
-            if (touchedDirs.isEmpty) inc
-            else inc.unionByName(
-              spark.read.option("basePath", curDel.toString)
-                .parquet(touchedDirs.map(_.toString): _*)
-                .select((keys.map(col) :+ col(DelBucketCol)): _*)).distinct()
-          merged.repartition(math.max(1, touchedDel.size), col(DelBucketCol))
-            .write.mode("append").partitionBy(DelBucketCol)
-            .parquet(nextDel.toString)
-        } else {
-          // first sharded commit: fold any flat carried set in and convert
-          val full = deleteKeySet(curDir) match {
-            case None      => inc
-            case Some(old) => inc.unionByName(
-              old.select(keys.map(col): _*).withColumn(DelBucketCol, bucketExpr))
-              .distinct()
-          }
-          full.repartition(math.max(1, bucketCount), col(DelBucketCol))
-            .write.mode("append").partitionBy(DelBucketCol)
-            .parquet(nextDel.toString)
-        }
+        val (touchedDirs, intactDirs) = deleteShardDirs(curDel)
+          .partition(d => shardIdOf(d).exists(touchedDel))
+        intactDirs.foreach(linkTree(curDir, _, nextDir))
+        writeShards(inc, touchedDirs, curDel, nextDel, touchedDel.size)
       }
     }
   }
@@ -2270,8 +2237,7 @@ final class KeyedParquetTable(
                                  touched: Set[Int],
                                  extra: Option[DataFrame] = None): Unit = {
     val curDel = deletesDirOf(curDir)
-    val hasSet = hasDeletes(curDir)
-    if (!hasSet && extra.isEmpty) return
+    if (!hasDeletes(curDir) && extra.isEmpty) return
     if (bucketCount <= 0) {
       // unbucketed: flat set, no bucket dimension to prune on
       (deleteKeySet(curDir), extra) match {
@@ -2284,7 +2250,7 @@ final class KeyedParquetTable(
             .repartition(1).write.mode("overwrite")
             .parquet(deletesDirOf(nextDir).toString)
       }
-    } else if (!hasSet || isSharded(curDel)) {
+    } else {
       // sharded carry: a rewritten bucket's shard is pruned by simply not
       // linking it — zero Spark jobs for the touched-only case (the common
       // scoped-merge commit); untouched shards keep inode identity, which
@@ -2307,34 +2273,9 @@ final class KeyedParquetTable(
       val shards = deleteShardDirs(curDel)
       shards.filter(d => shardIdOf(d).exists(b => !touched(b) && !extraBuckets(b)))
         .foreach(linkTree(curDir, _, nextDir))
-      extraInc.foreach { e =>
-        val hitDirs = shards.filter(d =>
-          shardIdOf(d).exists(b => extraBuckets(b) && !touched(b)))
-        val merged =
-          if (hitDirs.isEmpty) e
-          else e.unionByName(
-            spark.read.option("basePath", curDel.toString)
-              .parquet(hitDirs.map(_.toString): _*)
-              .select((keys.map(col) :+ col(DelBucketCol)): _*)).distinct()
-        merged.repartition(math.max(1, extraBuckets.size), col(DelBucketCol))
-          .write.mode("append").partitionBy(DelBucketCol)
-          .parquet(deletesDirOf(nextDir).toString)
-      }
-    } else {
-      // legacy flat set on a bucketed table: prune + fold extra, and
-      // convert to the sharded layout while we're rewriting anyway
-      val notTouched = (df: DataFrame) =>
-        if (touched.isEmpty) df
-        else df.filter(!col(DelBucketCol).isin(touched.toSeq: _*))
-      val parts =
-        deleteKeySet(curDir).map(c => notTouched(
-          c.select(keys.map(col): _*).withColumn(DelBucketCol, bucketExpr))).toSeq ++
-          extra.map(e => notTouched(
-            e.select(keys.map(col): _*).withColumn(DelBucketCol, bucketExpr))).toSeq
-      parts.reduce(_ unionByName _).distinct()
-        .repartition(math.max(1, bucketCount), col(DelBucketCol))
-        .write.mode("append").partitionBy(DelBucketCol)
-        .parquet(deletesDirOf(nextDir).toString)
+      extraInc.foreach(writeShards(_, shards.filter(d =>
+        shardIdOf(d).exists(b => extraBuckets(b) && !touched(b))), curDel,
+        deletesDirOf(nextDir), extraBuckets.size))
     }
   }
 
@@ -2505,7 +2446,7 @@ final class KeyedParquetTable(
         s"$root: base snapshot moved v$base -> v$v during reconcile — retry")
       v
     }
-    else if (bucketCount > 0 && !hasForeignFlatFiles)
+    else if (bucketCount > 0)
       mergeMor(delta, "operation", txn, expectedBase = base)
     else merge(delta, "operation", txn, None, expectedBase = base)
   }
@@ -2627,198 +2568,104 @@ final class KeyedParquetTable(
     graft.ops.FileStats.collect(spark, versionDir(v).toString, cols)
   }
 
-  /** O(metadata) COUNT(*): the current snapshot's LIVE row count answered
-    * from the transactional `_stats` index — the way Iceberg answers
-    * `SELECT COUNT(*)` from manifest row counts instead of scanning data
-    * (reference analog: the validation suite's row_count check,
+  /** O(metadata) aggregates — the one kernel behind [[countRows]],
+    * [[countOf]], [[minMaxOf]], [[sumOf]] and SQL aggregate pushdown: the
+    * current snapshot's LIVE aggregates answered from the transactional
+    * `_stats` index, the way Iceberg answers `SELECT COUNT(*)` from
+    * manifest row counts instead of scanning data (reference analog: the
+    * validation suite's row_count check,
     * `/root/reference/src/validation/validation.py:154-186`, which pays a
     * full scan per poll). Every commit writes the index atomically with
-    * the pointer swing and it carries per-file `n_rows`, so the sum IS
-    * the snapshot's row count; cost is one read of an O(files) metadata
-    * parquet, independent of data size — the difference between a free
-    * health probe and a 100 TB scan.
+    * the pointer swing; it carries per-file `n_rows`, `nl_<c>` null counts
+    * and `mn_<c>`/`mx_<c>` bounds for [[statsCols]] and `sm_<c>` sums for
+    * [[sumCols]], so folding its rows IS the snapshot's aggregate — one
+    * read of an O(files) metadata parquet, independent of data size.
     *
-    * Pending merge-on-read deletes subtract exactly where they live: on a
-    * sharded delete set the DEBT buckets (precisely the shard dirs' ids)
-    * are counted by a delete-applied scan of those buckets only, while
-    * every clean bucket still counts from stats — O(metadata +
-    * delete-debt), and compaction's debt materialization shrinks the scan
-    * half back to zero. Tables without the index (statsCols/bloom unset),
-    * flat delete sets, and foreign flat files fall back to the
-    * delete-applied scan count — correct, honestly O(table).
-    */
-  /** Can the stats index answer metadata aggregates WITHOUT a data scan?
-    * The planner-side guard for SQL aggregate pushdown: countRows/
-    * minMaxOf/sumOf execute at PLAN time there, so their scan fallbacks
-    * (no index, a flat/foreign delete set) would run a full table scan
-    * inside query planning — the pushdown must decline those shapes and
-    * let the ordinary scan+agg run at execution time instead.
-    */
-  def statsAggregatable: Boolean = {
-    if (!exists) return false
-    val curDir = versionDir(currentVersion)
-    if (walkParquet(curDir).isEmpty) return true // empty table: no scan possible
-    Files.exists(statsDirOf(curDir)) &&
-      (!hasDeletes(curDir) ||
-        (isSharded(deletesDirOf(curDir)) && bucketCount > 0 && !hasForeignFlatFiles &&
-          // the MoR hybrid scans the DEBT buckets' data inside the caller —
-          // which for SQL aggregate pushdown is ScanBuilder.build(), i.e.
-          // PLAN time. Bound the accepted debt so planning never becomes a
-          // near-full table scan: beyond 1/8 of the buckets, decline and
-          // let the ordinary scan+agg run at execution.
-          deleteShardDirs(deletesDirOf(curDir)).flatMap(shardIdOf).toSet.size
-            <= math.max(1, bucketCount / 8)))
-  }
-
-  /** Columns the CURRENT snapshot's stats index carries (empty when
-    * absent) — the per-column half of [[statsAggregatable]]: an index
-    * built before a column joined statsCols/sumCols lacks its mn_/mx_/sm_
-    * entries, and the corresponding aggregate would fall back to a scan.
-    */
-  def statsIndexColumns: Seq[String] = {
-    if (!exists) return Nil
-    val d = statsDirOf(versionDir(currentVersion))
-    if (!Files.exists(d)) Nil
-    else spark.read.parquet(d.toString).schema.fieldNames.toSeq
-  }
-
-  def countRows(): Long = {
-    val v = currentVersion
-    require(v >= 0, s"table $root has no snapshot")
-    val curDir = versionDir(v)
-    if (walkParquet(curDir).isEmpty) return 0L
-    val statsDir = statsDirOf(curDir)
-    if (!Files.exists(statsDir)) return read().count()
-    val statsDf = spark.read.parquet(statsDir.toString)
-    if (!hasDeletes(curDir))
-      statsDf.agg(coalesce(sum("n_rows"), lit(0L))).head.getLong(0)
-    else if (isSharded(deletesDirOf(curDir)) && bucketCount > 0 &&
-             !hasForeignFlatFiles) {
-      val debt = deleteShardDirs(deletesDirOf(curDir)).flatMap(shardIdOf).toSet
-      val cleanSum = statsDf.filter(!col("bucket").isin(debt.toSeq: _*))
-        .agg(coalesce(sum("n_rows"), lit(0L))).head.getLong(0)
-      cleanSum + (if (debt.isEmpty) 0L else readBuckets(debt).count())
-    } else read().count()
-  }
-
-  /** O(metadata) COUNT(c): the live NON-NULL count of a stats-covered
-    * column, answered from the per-file `nl_<c>` null counts in the
-    * transactional `_stats` index (Iceberg's manifests carry
-    * `null_value_counts` for exactly this) — COUNT(col) =
-    * Σ n_rows − Σ nl_<c>. Same merge-on-read hybrid as [[countRows]]:
-    * clean buckets answer from the index, delete-debt buckets by a scoped
-    * delete-applied scan. An index written before this column carried
-    * null counts lacks `nl_<c>` and falls back to the honest scan —
-    * [[statsIndexColumns]] lets planners decline that shape up front.
-    */
-  def countOf(c: String): Long = {
-    val v = currentVersion
-    require(v >= 0, s"table $root has no snapshot")
-    require(statsCols.contains(c),
-      s"countOf('$c') needs '$c' in statsCols (got $statsCols) — " +
-        "without index coverage use read().filter(isNotNull).count()")
-    val curDir = versionDir(v)
-    if (walkParquet(curDir).isEmpty) return 0L
-    def scanCount(df: DataFrame): Long = df.filter(col(c).isNotNull).count()
-    val statsDir = statsDirOf(curDir)
-    if (!Files.exists(statsDir)) return scanCount(read())
-    val statsDf = spark.read.parquet(statsDir.toString)
-    if (!statsDf.columns.contains(s"nl_$c")) return scanCount(read())
-    if (!hasDeletes(curDir))
-      statsDf.agg(coalesce(sum(col("n_rows") - col(s"nl_$c")), lit(0L)))
-        .head.getLong(0)
-    else if (isSharded(deletesDirOf(curDir)) && bucketCount > 0 &&
-             !hasForeignFlatFiles) {
-      val debt = deleteShardDirs(deletesDirOf(curDir)).flatMap(shardIdOf).toSet
-      val cleanSum = statsDf.filter(!col("bucket").isin(debt.toSeq: _*))
-        .agg(coalesce(sum(col("n_rows") - col(s"nl_$c")), lit(0L)))
-        .head.getLong(0)
-      cleanSum + (if (debt.isEmpty) 0L else scanCount(readBuckets(debt)))
-    } else scanCount(read())
-  }
-
-  /** O(metadata) MIN/MAX over a stats-covered column: one row
-    * (`min_<c>`, `max_<c>`) folded from the `_stats` index's per-file
-    * bounds — exactly `read().agg(min(c), max(c))`, because per-file
-    * mn/mx were computed from the data by the commit that wrote it and
-    * min/max ignore the NULL bounds an all-null file records (the same
-    * null semantics the scan aggregate has). Same merge-on-read hybrid as
-    * [[countRows]]: clean buckets answer from stats, delete-debt buckets
-    * by a scoped delete-applied scan; tables without the index or with
-    * unattributable delete sets fall back to the full scan aggregate.
-    */
-  def minMaxOf(c: String): DataFrame = {
-    val v = currentVersion
-    require(v >= 0, s"table $root has no snapshot")
-    require(statsCols.contains(c),
-      s"minMaxOf('$c') needs '$c' in statsCols (got $statsCols) — " +
-        "without index coverage use read().agg(min, max)")
-    val curDir = versionDir(v)
-    def scanAgg(df: DataFrame): DataFrame =
-      df.agg(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))
-    val statsDir = statsDirOf(curDir)
-    if (walkParquet(curDir).isEmpty || !Files.exists(statsDir))
-      return scanAgg(read())
-    val statsDf = spark.read.parquet(statsDir.toString)
-    def statsAgg(df: DataFrame): DataFrame =
-      df.select(col(s"mn_$c").as("__mn"), col(s"mx_$c").as("__mx"))
-    if (!hasDeletes(curDir))
-      statsDf.agg(min(col(s"mn_$c")).as(s"min_$c"),
-        max(col(s"mx_$c")).as(s"max_$c"))
-    else if (isSharded(deletesDirOf(curDir)) && bucketCount > 0 &&
-             !hasForeignFlatFiles) {
-      val debt = deleteShardDirs(deletesDirOf(curDir)).flatMap(shardIdOf).toSet
-      val clean = statsAgg(statsDf.filter(!col("bucket").isin(debt.toSeq: _*)))
-      val scanned =
-        if (debt.isEmpty) clean.limit(0)
-        else readBuckets(debt).select(col(c).as("__mn"), col(c).as("__mx"))
-      clean.unionByName(scanned)
-        .agg(min(col("__mn")).as(s"min_$c"), max(col("__mx")).as(s"max_$c"))
-    } else scanAgg(read())
-  }
-
-  /** O(metadata) SUM(c): the live sum answered from the per-file `sm_<c>`
-    * sums in the transactional stats index — the metadata-agg member
-    * Iceberg does NOT have (manifests carry row counts and bounds, not
-    * sums, so SUM there is always a full scan). Opt in per column via
-    * `sumCols` (numeric only — the index build fails loudly otherwise).
+    * `aggs` are (function, column) pairs — `count` (column `*` for
+    * COUNT(*)), `min`, `max` and `sum` — answered in ONE aggregation, one
+    * output column each, in order. Its input is the index rows of the
+    * clean buckets unioned with a delete-applied scan of the DEBT buckets
+    * (on a bucketed table, exactly the pending delete shards' ids), so the
+    * cost is O(metadata + delete debt) and compaction's debt
+    * materialization shrinks the scan half back to zero. No usable index
+    * (no `_stats`, or an index written before a needed column joined
+    * statsCols/sumCols), like an unbucketed table with pending deletes, is
+    * the case where the whole table is debt: correct, honestly O(table).
     *
-    * Exactness: integral columns are exact (sums of longs re-associate
-    * freely); floating columns can differ from a full-scan fold by IEEE
-    * reordering of the file partials — quantize to integral units first
-    * if bit-stability matters (the engine's standard trick).
+    * Exactness: min/max ignore the NULL bounds an all-null file records,
+    * the same null semantics the scan aggregate has. Integral sums are
+    * exact; floating sums can differ from a full-scan fold by IEEE
+    * reordering of the file partials (quantize to integral units first if
+    * bit-stability matters).
     *
-    * Merge-on-read debt handled like [[minMaxOf]]: clean buckets answer
-    * from the index, delete-carrying buckets scan their live rows; a
-    * legacy/flat delete set or an index predating `sumCols` falls back to
-    * the honest full scan.
+    * `planTime`: the caller runs at query PLANNING (SQL aggregate pushdown
+    * answers inside ScanBuilder.build()), so the answer is None unless the
+    * debt stays within 1/8 of the buckets (min 1) — planning must never
+    * become a near-full table scan; the ordinary scan+agg then runs at
+    * execution instead.
     */
-  def sumOf(c: String): DataFrame = {
+  private[graft] def statsAggregate(aggs: Seq[(String, String)],
+                                    planTime: Boolean = false): Option[DataFrame] = {
     val v = currentVersion
     require(v >= 0, s"table $root has no snapshot")
-    require(sumCols.contains(c),
-      s"sumOf('$c') needs '$c' in sumCols (got $sumCols) — " +
-        "without index coverage use read().agg(sum)")
+    // per pair: output name, index columns it reads, its value in an index
+    // row and in a data row, and the fold over those values
+    case class Part(name: String, ixCols: Seq[String], ixVal: Column,
+                    rowVal: Column, fold: Column => Column)
+    val parts = aggs.map {
+      case ("count", "*") =>
+        Part("count", Seq("n_rows"), col("n_rows"), lit(1L), x => coalesce(sum(x), lit(0L)))
+      case (f, c) =>
+        val (cover, coverName) = if (f == "sum") (sumCols, "sumCols") else (statsCols, "statsCols")
+        require(cover.contains(c), s"$f($c) needs '$c' in $coverName (got " +
+          s"${cover.mkString("[", ",", "]")}) — without index coverage aggregate read()")
+        f match {
+          case "count" => Part(s"count_$c", Seq("n_rows", s"nl_$c"),
+            col("n_rows") - col(s"nl_$c"), col(c).isNotNull.cast("long"),
+            x => coalesce(sum(x), lit(0L)))
+          case "min" => Part(s"min_$c", Seq(s"mn_$c"), col(s"mn_$c"), col(c), min(_))
+          case "max" => Part(s"max_$c", Seq(s"mx_$c"), col(s"mx_$c"), col(c), max(_))
+          case "sum" => Part(s"sum_$c", Seq(s"sm_$c"), col(s"sm_$c"), col(c), sum(_))
+        }
+    }
     val curDir = versionDir(v)
-    def scanAgg(df: DataFrame): DataFrame = df.agg(sum(col(c)).as(s"sum_$c"))
-    val statsDir = statsDirOf(curDir)
-    if (walkParquet(curDir).isEmpty || !Files.exists(statsDir))
-      return scanAgg(read())
-    val statsDf = spark.read.parquet(statsDir.toString)
-    if (!statsDf.columns.contains(s"sm_$c")) return scanAgg(read())
-    if (!hasDeletes(curDir))
-      statsDf.agg(sum(col(s"sm_$c")).as(s"sum_$c"))
-    else if (isSharded(deletesDirOf(curDir)) && bucketCount > 0 &&
-             !hasForeignFlatFiles) {
-      val debt = deleteShardDirs(deletesDirOf(curDir)).flatMap(shardIdOf).toSet
-      val clean = statsDf.filter(!col("bucket").isin(debt.toSeq: _*))
-        .select(col(s"sm_$c").as("__s"))
-      val scanned =
-        if (debt.isEmpty) clean.limit(0)
-        else readBuckets(debt).select(col(c).as("__s"))
-      clean.unionByName(scanned).agg(sum(col("__s")).as(s"sum_$c"))
-    } else scanAgg(read())
+    val index = Some(statsDirOf(curDir)).filter(Files.exists(_))
+      .map(d => spark.read.parquet(d.toString))
+      .filter(ix => parts.forall(_.ixCols.forall(ix.columns.contains)))
+    // the buckets whose live rows are scanned; None = the whole table
+    val debt: Option[Set[Int]] =
+      if (index.isEmpty) None
+      else if (!hasDeletes(curDir)) Some(Set.empty)
+      else if (bucketCount > 0) Some(debtBuckets(curDir))
+      else None
+    if (planTime && debt.forall(_.size > math.max(1, bucketCount / 8)) &&
+        snapshotHasFiles(v)) return None
+    def values(df: DataFrame, value: Part => Column): DataFrame =
+      df.select(parts.zipWithIndex.map { case (p, i) => value(p).as(s"__a$i") }: _*)
+    val clean = debt.flatMap(ds => index.map(ix => values(
+      if (ds.isEmpty) ix else ix.filter(!col("bucket").isin(ds.toSeq: _*)), _.ixVal)))
+    val scanned = debt.fold(Option(read()))(ds =>
+      if (ds.isEmpty) None else Some(readBuckets(ds))).map(values(_, _.rowVal))
+    Some((clean.toSeq ++ scanned).reduce(_ unionByName _).select(
+      parts.zipWithIndex.map { case (p, i) => p.fold(col(s"__a$i")).as(p.name) }: _*))
   }
+
+  /** O(metadata) COUNT(*) — [[statsAggregate]]. */
+  def countRows(): Long = statsAggregate(Seq("count" -> "*")).get.head.getLong(0)
+
+  /** O(metadata) COUNT(c) of a [[statsCols]] column — Σ n_rows − Σ nl_<c>
+    * over the index (Iceberg's manifests carry `null_value_counts` for
+    * exactly this) — [[statsAggregate]]. */
+  def countOf(c: String): Long = statsAggregate(Seq("count" -> c)).get.head.getLong(0)
+
+  /** O(metadata) MIN/MAX of a [[statsCols]] column as one row (`min_<c>`,
+    * `max_<c>`) — exactly `read().agg(min(c), max(c))` — [[statsAggregate]]. */
+  def minMaxOf(c: String): DataFrame = statsAggregate(Seq("min" -> c, "max" -> c)).get
+
+  /** O(metadata) SUM of a [[sumCols]] column as one row (`sum_<c>`) — the
+    * metadata aggregate Iceberg does NOT have (manifests carry row counts
+    * and bounds, not sums) — [[statsAggregate]]. */
+  def sumOf(c: String): DataFrame = statsAggregate(Seq("sum" -> c)).get
 
   // ---- per-snapshot stats index lifecycle (opt-in via statsCols) ----------
   //
@@ -3255,39 +3102,27 @@ final class KeyedParquetTable(
     else listEntries(dir).filter(p => Files.isDirectory(p) &&
       p.getFileName.toString.startsWith("__bucket="))
 
+  private def bucketIdOf(d: Path): Option[Int] =
+    d.getFileName.toString.stripPrefix("__bucket=").toIntOption
+
   private def compactScoped(targetPartitions: Int,
                             sortBy: Seq[String] = Nil): Option[Long] = {
     val cur = currentVersion
     val curDir = versionDir(cur)
-    // flat files from a foreign writer next to bucket dirs → scoped rewrite
-    // would silently drop them; fall back to the full rewrite
-    if (hasFlatFiles(curDir))
-      return Some(commitInternal(read().repartition(targetPartitions), None,
-        carry = true, base = cur))
     // fragmentation is judged per LEAF directory: a partitioned bucket with
     // one file per partition dir is already compact (a per-bucket file
     // count would flag it forever and churn-rewrite it on every call).
     // Buckets with PENDING merge-on-read delete keys also rewrite — the
     // delete-threshold rule of Iceberg's rewrite_data_files: compaction is
     // where deferred deletes become physical, so a compacted table carries
-    // no delete set for the buckets it touched (one bounded bucket-id job,
-    // only when a delete set exists)
-    val deleteBuckets: Set[Int] =
-      if (!hasDeletes(curDir)) Set.empty
-      else if (isSharded(deletesDirOf(curDir)))
-        // sharded set: the pending buckets ARE the shard dir names — a
-        // directory listing, no Spark job
-        deleteShardDirs(deletesDirOf(curDir)).flatMap(shardIdOf).toSet
-      else distinctInts(deleteKeySet(curDir).get.select(
-        pmod(abs(xxhash64(bucketKeys.map(col): _*)), lit(bucketCount))
-          .cast("int").as("__b")))
+    // no delete set for the buckets it touched (the pending buckets ARE the
+    // shard dir names — a directory listing, no Spark job)
+    val deleteBuckets = debtBuckets(curDir)
     val (fragmented, intact) = bucketDirsOf(curDir).partition(d =>
       walkParquet(d).groupBy(_.getParent).exists(_._2.size >= 2) ||
-        d.getFileName.toString.stripPrefix("__bucket=").toIntOption
-          .exists(deleteBuckets))
+        bucketIdOf(d).exists(deleteBuckets))
     if (fragmented.isEmpty) return None
-    val rewrittenIds = fragmented.flatMap(
-      _.getFileName.toString.stripPrefix("__bucket=").toIntOption).toSet
+    val rewrittenIds = fragmented.flatMap(bucketIdOf).toSet
     Some(commitKernel(cur, None) { nextDir =>
       // one hash partition per fragmented bucket → ~one output file each;
       // basePath keeps the __bucket / partition columns readable from the
@@ -3690,6 +3525,7 @@ final class KeyedParquetTable(
   /** K6: drop the table and purge all data. */
   def drop(): Unit = {
     schemaCache = None
+    layoutChecked = false // a re-created root pins again at its first commit
     if (Files.exists(rootPath)) deleteRecursively(rootPath)
   }
 
@@ -3701,11 +3537,11 @@ final class KeyedParquetTable(
 
 object KeyedParquetTable {
   /** Open an existing engine root, reconstructing the layout the root
-    * PINNED at its first commit (`graft.layout.*` properties) — the same
-    * self-description [[graft.catalog.GraftCatalog.register]] trusts, so a
-    * consumer that only holds a path (the streaming source, a CLI) opens
-    * the table with the exact keyed/bucketed layout its writers use.
-    * Legacy unpinned roots open keyless/unbucketed — fine for reads.
+    * PINNED at its first commit (`graft.layout.*` properties), so a
+    * consumer that only holds a path (the streaming source, a CLI,
+    * [[graft.catalog.GraftCatalog.register]]) opens the table with the
+    * exact keyed/bucketed layout its writers use. A root that is not in
+    * the current on-disk format (see the class doc) is refused.
     */
   def openRoot(spark: SparkSession, root: String): KeyedParquetTable = {
     val probe = new KeyedParquetTable(spark, root, Nil)
@@ -3713,11 +3549,13 @@ object KeyedParquetTable {
     val p = probe.properties
     def split(s: String): Seq[String] =
       s.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-    new KeyedParquetTable(spark, root,
+    val t = new KeyedParquetTable(spark, root,
       keys = split(p.getOrElse("graft.layout.keys", "")),
       partitionBy = split(p.getOrElse("graft.layout.partition-by", "")),
       bucketCount = p.getOrElse("graft.layout.bucket-count", "0").toInt,
       bucketBy = split(p.getOrElse("graft.layout.bucket-keys", "")))
+    t.ensureLayout(stamp = false)
+    t
   }
 
   /** Runtime ordering for stats-index pruning: external Row values of one

@@ -149,13 +149,21 @@ object FuzzyDedup {
     * computed ONLY for candidate-matched docs (corpus pass 2, semi-join
     * restricted) read from their own checkpoint by both verify joins.
     * Both plans compute the identical pair set (FuzzyDedupSpec asserts
-    * equality); only scan/barrier structure differs.
+    * equality); only scan/barrier structure differs. An input without
+    * size statistics (an RDD-backed frame reports
+    * `spark.sql.defaultSizeInBytes`) has an unknown size and takes the
+    * fused plan. The scan-lean plan is EAGER: its three checkpoints run
+    * while this method builds the frame, not at the caller's first action.
     */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double = 0.7, numHashes: Int = 32,
                    bands: Int = 8, shingle: Int = 3): DataFrame =
     nearDupPairsPlanned(docs, idCol, textCol, threshold, numHashes, bands,
-      shingle, scanLean = estimatedBytes(docs) >= largeCorpusBytes)
+      shingle, scanLean = {
+        val est = estimatedBytes(docs)
+        est >= largeCorpusBytes &&
+          est < org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes
+      })
 
   /** Plan-forced [[nearDupPairs]] (the adaptive switch resolved by the
     * caller — exposed for the equivalence spec and plan audits).

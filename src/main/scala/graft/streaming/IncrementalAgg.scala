@@ -399,8 +399,8 @@ object IncrementalAgg {
     if (entityBuckets.fold(latest.isEmpty)(_.isEmpty)) {
       latest.unpersist(false); return prevAgg
     }
-    // FUSED entity read (hot path, bucketed entity table in the engine's
-    // own layout): the touched buckets' complete state is scanned ONCE and
+    // FUSED entity read (hot path, bucketed entity table): the touched
+    // buckets' complete state is scanned ONCE and
     // cached; it then serves BOTH the retraction pre-images and the entity
     // commit (mergeUpsert over it + [[KeyedParquetTable.replaceBuckets]]),
     // where the unfused path scans the same parquet twice — readForKeys for
@@ -408,7 +408,7 @@ object IncrementalAgg {
     // touched buckets, the same bound mergeScoped's own rewrite carries;
     // persist() stores MEMORY_AND_DISK, so an outsized bucket spills rather
     // than OOMs.
-    val fused = entityTable.bucketCount > 0 && !entityTable.hasForeignFlatFiles
+    val fused = entityTable.bucketCount > 0
     // the pre-image groups' agg-bucket probe rides the pre checkpoint job
     // below; an absent/empty pre contributes no buckets
     val preObs =
@@ -592,7 +592,7 @@ object IncrementalAgg {
       aggTable.replaceBuckets(foldInto(cur, deltaRows), aggBuckets, txnId,
         align = false)
     } else {
-      // unfused fallback (unbucketed tables / foreign flat layout):
+      // unfused fallback (unbucketed tables):
       // aggregate the delta per group once and checkpoint it — it embeds
       // the pre-image read and feeds the bucket probe, the fold read and
       // the commit write, which would otherwise each re-run it.

@@ -81,9 +81,8 @@ object Ingest {
     * anyway — upserts overwrite with identical values — the markers exist
     * to skip the wasted work and keep the lineage exact.)
     *
-    * Replay probe cost: on a bucketed lineage table (bucketed by batch_id)
-    * the probe reads ONE bucket's files, not the ever-growing history —
-    * the same O(batch)-per-micro-batch bound as the merge itself.
+    * Replay probe cost: both halves record the batch id as their txn
+    * marker, so each probe is a metadata read — no Spark job.
     */
   def applyBatch(batch: DataFrame, batchId: Long, table: KeyedParquetTable,
                  ordering: Seq[Column], lineage: Option[KeyedParquetTable],
@@ -91,31 +90,13 @@ object Ingest {
     val spark = batch.sparkSession
     import spark.implicits._
     val batchTxn = batchId.toString
-    val lineageDone = lineage.exists { l =>
-      l.exists && (l.lastTxn.flatMap(_.toLongOption) match {
-        // txn-marked lineage (appends carry the batch id): markers advance
-        // monotonically with Structured Streaming's batch ids under one
-        // checkpoint, so a marker at or past this id proves the row was
-        // recorded — a metadata read, no per-batch Spark job
-        case Some(m) => m >= batchId
-        // pre-marker lineage table: bucket-pruned scan probe (one job)
-        case None =>
-          val rows =
-            if (l.bucketCount > 0 && l.bucketKeys == Seq("batch_id"))
-              l.readForKeys(Seq(batchId).toDF("batch_id"))
-            else l.read()
-          rows.filter(col("batch_id") === batchId).limit(1).count() > 0
-      })
-    }
-    // tables ingested before txn marking existed report None and re-merge
-    // once on redelivery (a harmless semantic no-op); from then on the
-    // marker short-circuits
-    val mergeDone = table.exists && table.lastTxn.contains(batchTxn)
+    // lineage appends carry the batch id as their txn marker; markers
+    // advance monotonically with Structured Streaming's batch ids under one
+    // checkpoint, so a marker at or past this id proves the row was recorded
+    val lineageDone = lineage.exists(_.lastTxn.flatMap(_.toLongOption).exists(_ >= batchId))
+    val mergeDone = table.lastTxn.contains(batchTxn)
     // both halves recorded → pure replay, nothing to do
     if ((lineage.isEmpty || lineageDone) && mergeDone) return false
-    // lineage recorded against a table that was never created: a pre-txn-era
-    // recovery state — keep the historical skip
-    if (lineageDone && !table.exists) return false
     // localCheckpoint: the count, the merge's bucket discovery, and the
     // merge write would otherwise each re-run the dedup window (3× the
     // batch shuffle on the hot ingest path) — and the count AND the merge's

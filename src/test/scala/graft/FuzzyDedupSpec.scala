@@ -311,4 +311,21 @@ class FuzzyDedupSpec extends SparkSpec {
       assert(FuzzyDedup.estimatedBytes(docs) >= FuzzyDedup.largeCorpusBytes)
     } finally System.clearProperty(key)
   }
+
+  test("nearDupPairs over a stats-less (RDD-backed) corpus takes the lazy fused plan") {
+    // an RDD-backed frame reports spark.sql.defaultSizeInBytes: an unknown
+    // size, not a huge one — building the pairs must start no Spark job
+    // (the scan-lean plan would run its three checkpoints right here)
+    val text = "the quick brown fox jumps over the lazy dog by the river bank"
+    val corpus = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        org.apache.spark.sql.Row(1L, text),
+        org.apache.spark.sql.Row(2L, text + " today"))),
+      org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, text STRING"))
+    assert(FuzzyDedup.estimatedBytes(corpus) >=
+      org.apache.spark.sql.internal.SQLConf.get.defaultSizeInBytes)
+    var pairs: org.apache.spark.sql.DataFrame = null
+    assert(jobsStartedBy { pairs = FuzzyDedup.nearDupPairs(corpus, "doc_id", "text",
+      threshold = 0.5) } === 0)
+    assert(pairs.select("id_a", "id_b").as[(Long, Long)].collect().toSeq === Seq((1L, 2L)))
+  }
 }

@@ -495,21 +495,28 @@ class GraftCatalogSpec extends SparkSpec {
     assert(sql("SELECT id FROM graft.spec.regp WHERE grp = 'b' ORDER BY id")
       .as[Long].collect().toSeq === Seq(2L, 3L))
     sql("DROP TABLE graft.spec.regp")
-    // a LEGACY root (pre-pinning) with identity-partition dirs still
-    // refuses registration unless the partition columns are declared
-    // (mixed-layout write hazard)
+    // a root without its layout pins is not in the current on-disk format:
+    // registration (even with the partition columns declared), openRoot,
+    // merge and readForKeys all refuse it and name the migration
     val props = java.nio.file.Paths.get(proot, "_properties")
     java.nio.file.Files.writeString(props,
       java.nio.file.Files.readString(props).linesIterator
         .filterNot(_.startsWith("graft.layout.partition-by="))
         .mkString("\n"))
-    val e = intercept[IllegalArgumentException] {
-      graftCatalog.register(Identifier.of(Array("spec"), "regleg"), proot) }
-    assert(e.getMessage.contains("PARTITIONED BY"), e.getMessage)
-    graftCatalog.register(Identifier.of(Array("spec"), "regleg"), proot,
-      partitionBy = Seq("grp"))
-    assert(sql("SELECT COUNT(*) FROM graft.spec.regleg").head().getLong(0) === 3L)
-    sql("DROP TABLE graft.spec.regleg")
+    def open() = new KeyedParquetTable(spark, proot, Seq("id"), Seq("grp"), 2)
+    val refusals = Seq(
+      intercept[IllegalStateException] {
+        graftCatalog.register(Identifier.of(Array("spec"), "regleg"), proot) },
+      intercept[IllegalStateException] {
+        graftCatalog.register(Identifier.of(Array("spec"), "regleg"), proot,
+          partitionBy = Seq("grp")) },
+      intercept[IllegalStateException] { KeyedParquetTable.openRoot(spark, proot) },
+      intercept[IllegalStateException] {
+        open().merge(Seq((4L, "a", "u")).toDF("id", "grp", "operation")) },
+      intercept[IllegalStateException] { open().readForKeys(Seq(1L).toDF("id")) })
+    refusals.foreach(e => assert(e.getMessage.contains("read() into a new root"),
+      e.getMessage))
+    assert(!graftCatalog.tableExists(Identifier.of(Array("spec"), "regleg")))
   }
 
   test("UPDATE ... WHERE / DELETE FROM ... WHERE as literal SQL; refusals") {
@@ -1073,6 +1080,25 @@ class GraftCatalogSpec extends SparkSpec {
       "index-less COUNT(*) must not push down")
     assert(noIdx.head().getLong(0) === 2L)
     sql("DROP TABLE graft.spec.aggx")
+    // one stats kernel answers every pushed aggregate in one aggregation:
+    // planning four aggregates starts no more Spark jobs than planning one
+    sql("DROP TABLE IF EXISTS graft.spec.aggj")
+    sql("""CREATE TABLE graft.spec.aggj (id BIGINT, price BIGINT)
+           PARTITIONED BY (bucket(8, id))
+           TBLPROPERTIES ('graft.keys'='id', 'graft.statsCols'='price',
+                          'graft.sumCols'='price')""")
+    sql("INSERT INTO graft.spec.aggj SELECT id, (id * 37) % 1000 FROM range(2000)")
+    val countOnly = "SELECT count(*) FROM graft.spec.aggj"
+    val fourAggs = "SELECT count(*), min(price), max(price), sum(price) FROM graft.spec.aggj"
+    val jobs = Seq(countOnly, fourAggs).map(q =>
+      jobsStartedBy(sql(q).queryExecution.executedPlan))
+    assert(jobs(1) <= jobs(0), s"planning jobs: count(*) ${jobs(0)}, four aggregates ${jobs(1)}")
+    import org.apache.spark.sql.functions.{count, lit, max, min, sum}
+    val pushedFour = sql(fourAggs)
+    assert(!pushedFour.queryExecution.executedPlan.toString.contains("HashAggregate"))
+    assert(pushedFour.head() === graftCatalog.tableFor(Identifier.of(Array("spec"), "aggj"))
+      .read().agg(count(lit(1)), min("price"), max("price"), sum("price")).head())
+    sql("DROP TABLE graft.spec.aggj")
   }
 
   test("COUNT(col) pushdown: nl_ null counts answer scan-free; stale/debt/decimal shapes decline") {

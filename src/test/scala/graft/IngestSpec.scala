@@ -741,7 +741,8 @@ class IngestSpec extends SparkSpec {
     val table2 = new KeyedParquetTable(spark, tmpDir("half_tbl2"), Seq("id"))
     table2.createIfNotExists(tableSchema)
     val lineage2 = new KeyedParquetTable(spark, tmpDir("half_lin2"), Seq("batch_id"))
-    lineage2.append(Seq(Ingest.BatchLineage(9L, 2L, "applied")).toDF())
+    // the lineage half as applyBatch writes it: the row with its txn marker
+    lineage2.append(Seq(Ingest.BatchLineage(9L, 2L, "applied")).toDF(), Some("9"))
     assert(Ingest.applyBatch(batch, 9L, table2, Seq(col("seq").desc), Some(lineage2)))
     assert(table2.read().count() === 2 && table2.lastTxn === Some("9"))
     assert(lineage2.read().count() === 1, "lineage half must not be re-appended")

@@ -1167,19 +1167,48 @@ class KeyedParquetTableSpec extends SparkSpec {
     opted.merge(Seq((5L, "y", "u")).toDF("id", "v", "operation"))
     assert(opted.readStats().columns.contains("bloom_id"))
 
-    // legacy tables (created before pinning existed) are stamped by their
-    // next commit, not rejected: simulate by stripping the layout keys
-    val props = java.nio.file.Paths.get(root, "_properties")
-    val kept = java.nio.file.Files.readString(props).linesIterator
-      .filterNot(_.startsWith("graft.layout.")).mkString("\n")
-    java.nio.file.Files.writeString(props, kept)
-    val legacy = new KeyedParquetTable(spark, root, Seq("id"), Nil, 8, Nil,
-      statsCols = Seq("id"), bloomKeyBits = 1 << 13)
-    // tolerated (readForKeys returns the pruned SUPERSET — filter to probe)
-    assert(legacy.readForKeys(Seq(3L).toDF("id"))
-      .filter(col("id") === 3L).count() === 1L)
-    legacy.merge(Seq((6L, "z", "u")).toDF("id", "v", "operation"))
-    assert(legacy.properties("graft.layout.bucket-count") === "8") // re-stamped
+    // a root in any other on-disk format is refused, naming the migration:
+    // one with a snapshot but no pins (simulated by stripping the layout
+    // keys), and bucketed roots whose snapshot holds top-level parquet files
+    // or a flat delete set
+    import java.nio.file.{Files, Paths}
+    val props = Paths.get(root, "_properties")
+    Files.writeString(props, Files.readString(props).linesIterator
+      .filterNot(_.startsWith("graft.layout.")).mkString("\n"))
+    def bucketed(name: String)(spoil: java.nio.file.Path => Unit): String = {
+      val r = tmpDir(name)
+      val b = new KeyedParquetTable(spark, r, Seq("id"), Nil, 8)
+      b.commit((0L until 50L).map(i => (i, s"v$i")).toDF("id", "v"))
+      spoil(Paths.get(r, s"v${b.currentVersion}"))
+      r
+    }
+    val flatData = bucketed("kpt_layout_flat") { d =>
+      Seq((99L, "f")).toDF("id", "v").coalesce(1).write.parquet(d.resolve("_f").toString)
+      Files.list(d.resolve("_f")).iterator.asScala.filter(_.toString.endsWith(".parquet"))
+        .foreach(f => Files.move(f, d.resolve("part-flat.parquet")))
+    }
+    val flatDeletes = bucketed("kpt_layout_flatdel") { d =>
+      Seq(Tuple1(3L)).toDF("id").write.parquet(d.resolve("_deletes").toString)
+    }
+    for ((r, why) <- Seq(root -> "no graft.layout", flatData -> "top-level parquet",
+                         flatDeletes -> "flat delete set")) {
+      def open() = new KeyedParquetTable(spark, r, Seq("id"), Nil, 8)
+      val refusals = Seq(
+        intercept[IllegalStateException] {
+          open().merge(Seq((6L, "z", "u")).toDF("id", "v", "operation")) },
+        intercept[IllegalStateException] { open().readForKeys(Seq(3L).toDF("id")) },
+        intercept[IllegalStateException] { KeyedParquetTable.openRoot(spark, r) })
+      refusals.foreach { e =>
+        assert(e.getMessage.contains(why) &&
+          e.getMessage.contains("read() into a new root"), e.getMessage)
+      }
+    }
+    // the migration the message names: read() still serves the old root
+    val migrated = new KeyedParquetTable(spark, tmpDir("kpt_layout_migrated"),
+      Seq("id"), Nil, 8)
+    migrated.commit(new KeyedParquetTable(spark, root, Seq("id"), Nil, 8).read())
+    assert(migrated.readForKeys(Seq(5L).toDF("id")).filter(col("id") === 5L)
+      .count() === 1L)
   }
 
   private def dataFileKeys(dir: String, v: Long): Set[Object] = {
@@ -2044,7 +2073,7 @@ class KeyedParquetTableSpec extends SparkSpec {
     assert(total(t.rebucketTo(tmpDir("kpt_sumcols_rebkt"), 8)) === 55.0)
     t.branch("b").merge(Seq((11L, 11.0, "u")).toDF("id", "score", "operation"))
     t.fastForward("b")
-    assert(t.statsIndexColumns.contains("sm_score"))
+    assert(t.readStats().columns.contains("sm_score"))
     assert(total(t) === 66.0)
   }
 
@@ -2123,7 +2152,7 @@ class KeyedParquetTableSpec extends SparkSpec {
       assert(Files.exists(dir.resolve("_schema.json")) === !k.full, clue)
       assert(t.read().columns.contains("note"), clue)
       assert(t.txnLedger.get("app") === Some(1L), clue)
-      assert(t.statsIndexColumns.contains("sm_score"), clue)
+      assert(t.readStats().columns.contains("sm_score"), clue)
     }
   }
 
@@ -2255,6 +2284,50 @@ class KeyedParquetTableSpec extends SparkSpec {
       Nil, 0, Nil, statsCols = Seq("id"))
     e.createIfNotExists(schema)
     assert(e.countRows() === 0L)
+
+    // the one stats kernel against the scan aggregate, on every input
+    // shape: COUNT(*), COUNT(c), MIN, MAX and SUM, plus whether the
+    // plan-time form answers (it declines whenever the kernel would scan
+    // beyond 1/8 of the buckets)
+    def opened(r: String) = new KeyedParquetTable(spark, r, Seq("id"), Nil, 16,
+      statsCols = Seq("id", "score"), sumCols = Seq("score"))
+    val rows = (1L to 400L).map(i =>
+      (i, if (i % 7 == 0) None else Some(i * 3L))).toDF("id", "score")
+    // committed under `stats`/`sums`, reopened with score in both
+    def committed(name: String, stats: Seq[String],
+                  sums: Seq[String] = Seq("score")): KeyedParquetTable = {
+      val r = tmpDir(name)
+      new KeyedParquetTable(spark, r, Seq("id"), Nil, 16, statsCols = stats,
+        sumCols = sums).commit(rows)
+      opened(r)
+    }
+    val noIndex = committed("kpt_agg_noidx", Nil, Nil)
+    val clean = committed("kpt_agg_clean", Seq("id", "score"))
+    val withinBound = committed("kpt_agg_within", Seq("id", "score"))
+    withinBound.deleteKeys(Seq(Tuple1(7L), Tuple1(10L)).toDF("id"))
+    val beyondBound = committed("kpt_agg_beyond", Seq("id", "score"))
+    beyondBound.deleteWhere(col("id") % 3 === 0)
+    // statsCols gained `score` after the last commit: the index lacks it
+    val staleIndex = committed("kpt_agg_stale", Seq("id"))
+    val empty = opened(tmpDir("kpt_agg_empty"))
+    empty.createIfNotExists(rows.schema)
+    val aggs = Seq("count" -> "*", "count" -> "score", "min" -> "score",
+      "max" -> "score", "sum" -> "score")
+    for ((t, answersAtPlanTime) <- Seq(noIndex -> false, clean -> true,
+        withinBound -> true, beyondBound -> false, staleIndex -> false,
+        empty -> true)) {
+      val clue = t.root
+      val scan = t.read().agg(count(lit(1)), count(col("score")),
+        min(col("score")), max(col("score")), sum(col("score"))).head()
+      assert(t.statsAggregate(aggs).get.head() === scan, clue)
+      assert(t.countRows() === scan.getLong(0), clue)
+      assert(t.countOf("score") === scan.getLong(1), clue)
+      assert(t.minMaxOf("score").head() ===
+        org.apache.spark.sql.Row(scan.get(2), scan.get(3)), clue)
+      assert(t.sumOf("score").head().get(0) === scan.get(4), clue)
+      assert(t.statsAggregate(aggs, planTime = true).isDefined === answersAtPlanTime,
+        clue)
+    }
   }
 
   test("sumOf answers from the stats index and stays delete-exact") {

@@ -2606,6 +2606,9 @@ final class KeyedParquetTable(
     */
   private[graft] def statsAggregate(aggs: Seq[(String, String)],
                                     planTime: Boolean = false): Option[DataFrame] = {
+    // the debt rule below trusts the current format (sharded delete set,
+    // no top-level files the index does not cover)
+    ensureLayout(stamp = false)
     val v = currentVersion
     require(v >= 0, s"table $root has no snapshot")
     // per pair: output name, index columns it reads, its value in an index

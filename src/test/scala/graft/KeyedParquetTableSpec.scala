@@ -1177,7 +1177,7 @@ class KeyedParquetTableSpec extends SparkSpec {
       .filterNot(_.startsWith("graft.layout.")).mkString("\n"))
     def bucketed(name: String)(spoil: java.nio.file.Path => Unit): String = {
       val r = tmpDir(name)
-      val b = new KeyedParquetTable(spark, r, Seq("id"), Nil, 8)
+      val b = new KeyedParquetTable(spark, r, Seq("id"), Nil, 8, statsCols = Seq("id"))
       b.commit((0L until 50L).map(i => (i, s"v$i")).toDF("id", "v"))
       spoil(Paths.get(r, s"v${b.currentVersion}"))
       r
@@ -1197,7 +1197,12 @@ class KeyedParquetTableSpec extends SparkSpec {
         intercept[IllegalStateException] {
           open().merge(Seq((6L, "z", "u")).toDF("id", "v", "operation")) },
         intercept[IllegalStateException] { open().readForKeys(Seq(3L).toDF("id")) },
-        intercept[IllegalStateException] { KeyedParquetTable.openRoot(spark, r) })
+        intercept[IllegalStateException] { KeyedParquetTable.openRoot(spark, r) },
+        // every root here has a stats index, so an unchecked aggregate would
+        // answer from it and miss the spoiled files or pending deletes
+        intercept[IllegalStateException] { open().countRows() },
+        intercept[IllegalStateException] {
+          open().statsAggregate(Seq("count" -> "*"), planTime = true) })
       refusals.foreach { e =>
         assert(e.getMessage.contains(why) &&
           e.getMessage.contains("read() into a new root"), e.getMessage)

@@ -52,6 +52,13 @@ private[catalog] object Pin {
   * InternalRow→Row→InternalRow hop ONLY for rows that survive pruning and
   * filtering — the same rows a native DSv2 Batch would have emitted.
   *
+  * Planning, like an Iceberg scan planned from manifests, reads only
+  * metadata, on the driver: the schema from one parquet footer (or the
+  * declared `_schema.json`), literal keys' bucket ids and probe summary
+  * from a local relation, and the `_stats` index through Spark's parquet
+  * reader run in-process. A literal point read, a literal range read and
+  * a time-travel read start no Spark job until the query runs.
+  *
   * Write path: [[V1Write]] → the table's transactional surface:
   * INSERT INTO appends a snapshot-incremental commit
   * ([[KeyedParquetTable.append]]), INSERT OVERWRITE (truncate) commits a
@@ -165,9 +172,10 @@ final class GraftTable(val kpt: KeyedParquetTable, ident: String, pin: Pin)
 /** Pushdown planner for a catalog read. Spark hands the conjunctive
   * top-level predicates here; the builder (a) picks the engine's best
   * physical prune for them — bucket-directory pruning when every bucket
-  * key has an equality (or IN, single-key), else file-stats range pruning
-  * on a stats column — and (b) re-applies every translatable predicate
-  * inside the inner plan so the nested parquet scan gets row-group
+  * key has an equality (or IN), else file-stats range pruning on a stats
+  * column, both decided on the driver from the literal values and table
+  * metadata with no Spark job — and (b) re-applies every translatable
+  * predicate inside the inner plan so the nested parquet scan gets row-group
   * pushdown too. All filters are returned as residuals (Spark re-evaluates
   * them above the scan): pruning must only ever widen, never decide
   * membership, so a translation gap degrades to a wider scan instead of a
@@ -296,13 +304,13 @@ final class GraftScanBuilder(table: GraftTable)
 
   /** The pruned base frame, the prune decision, and a label for explain. */
   private[catalog] def prunedBase(): (DataFrame, String) = {
-    val current = table.pinnedRead()
-    def fallback = (current, "full")
+    def fallback = (table.pinnedRead(), "full")
     if (!table.isCurrent) fallback
     else {
       val eqs = bucketEqualities(pushed)
       if (kpt.bucketCount > 0 && kpt.bucketKeys.forall(eqs.contains)) {
-        // one probe row per combination of IN values across the bucket keys
+        // one literal probe row per combination of IN values across the
+        // bucket keys: its bucket ids and probe summary come from the driver
         val keyFields = StructType(kpt.bucketKeys.map(k => table.schema(k)))
         val combos = kpt.bucketKeys.foldLeft(Seq(Seq.empty[Any])) {
           (acc, k) => acc.flatMap(row => eqs(k).map(v => row :+ v))
@@ -310,7 +318,8 @@ final class GraftScanBuilder(table: GraftTable)
         Try {
           val probe = kpt.spark.createDataFrame(
             combos.map(Row.fromSeq).asJava, keyFields)
-          (kpt.readForKeys(probe), s"buckets[${kpt.bucketKeys.mkString(",")}]")
+          (kpt.readForKeys(probe, Some(kpt.literalBuckets(probe))),
+            s"buckets[${kpt.bucketKeys.mkString(",")}]")
         }.getOrElse(fallback)
       } else {
         kpt.statsCols.iterator.map(c => c -> rangeBounds(c, pushed)).collectFirst {

@@ -105,10 +105,9 @@ final class KeyedParquetTable(
     * once per table instance. Merge/append/compact preserve the schema by
     * construction (`mergeUpsert` projects the target's columns,
     * [[requireAppendCompatible]] rejects evolution), so the cache survives
-    * them and a per-micro-batch maintainer skips one parquet footer-inference
-    * Spark job on EVERY probe read and merge — a real slice of the per-batch
-    * fixed cost. Full [[commit]], [[rollbackTo]] and [[drop]] can change the
-    * schema and invalidate. Per-instance and single-writer, the same
+    * them and a per-micro-batch maintainer skips one footer read on EVERY
+    * probe read and merge. Full [[commit]], [[rollbackTo]] and [[drop]] can
+    * change the schema and invalidate. Per-instance and single-writer, the same
     * assumption every commit path here documents.
     */
   @volatile private var schemaCache: Option[org.apache.spark.sql.types.StructType] = None
@@ -120,16 +119,44 @@ final class KeyedParquetTable(
     val isCurrent = dir == versionDir(currentVersion)
     if (isCurrent && schemaCache.isDefined) schemaCache.get
     else {
-      val s = declaredSchema(dir).getOrElse(spark.read.parquet(dir.toString).schema)
+      val s = declaredSchema(dir).getOrElse(scanParquet(Seq(dir)).schema)
       if (isCurrent) schemaCache = Some(s)
       s
     }
   }
 
+  /** The Spark schema written into the footer of the first parquet file
+    * under `paths` ([[walkParquet]]), read on the driver. None when there
+    * is no such file or its footer carries no Spark schema.
+    */
+  private def footerSchema(paths: Seq[Path]): Option[org.apache.spark.sql.types.StructType] =
+    paths.iterator.flatMap(walkParquet).nextOption().flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(f))
+      try Option(r.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally r.close()
+    }.flatMap(json => scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(json))
+      .toOption.collect { case s: org.apache.spark.sql.types.StructType => s })
+
+  /** A parquet scan of `paths` (data, a delete set or a stats index) under
+    * the Spark schema of one file's footer, read on the driver. Spark's own
+    * inference also reads a single footer when `mergeSchema` is off, but in
+    * a Spark job; partition discovery is driver-side listing either way and
+    * still appends `__bucket` and the partition columns, so the scan has the
+    * schema inference gives. Without a Spark schema in the footer (or with
+    * no file) this is inference.
+    */
+  private[graft] def scanParquet(paths: Seq[Path], basePath: Option[Path] = None): DataFrame = {
+    val reader = basePath.foldLeft(spark.read)((r, bp) => r.option("basePath", bp.toString))
+    val ps = paths.map(_.toString)
+    footerSchema(paths).fold(reader.parquet(ps: _*))(s => reader.schema(s).parquet(ps: _*))
+  }
+
   /** The current snapshot's physical schema (data + layout columns)
     * WITHOUT building a read plan — declared `_schema.json` when pinned,
-    * else footer inference, cached per instance. For callers that only
-    * need field names/types (the streaming sink's mergeSchema diff), not
+    * else the footer schema ([[scanParquet]]), cached per instance. For
+    * callers that only need field names/types (the streaming sink's mergeSchema diff), not
     * the full MoR/evolution read semantics.
     */
   def currentSchema: org.apache.spark.sql.types.StructType = {
@@ -242,7 +269,7 @@ final class KeyedParquetTable(
           Seq(versionDir(version).toString))
       else declaredSchema(versionDir(version)) match {
         case Some(s) => scanDeclared(s, None, Seq(versionDir(version).toString))
-        case None    => spark.read.parquet(versionDir(version).toString)
+        case None    => scanParquet(Seq(versionDir(version)))
       }
     val live = applyDeletes(df, versionDir(version)) // merge-on-read
     if (bucketCount > 0 && live.columns.contains("__bucket")) live.drop("__bucket") else live
@@ -424,9 +451,12 @@ final class KeyedParquetTable(
     * `keysDf` must carry the table's [[bucketKeys]] columns under their own
     * names and with the stored key types (the bucket id is a hash OF THE
     * VALUES — a differently-typed key would hash into the wrong bucket and
-    * silently miss rows). The touched-bucket set is collected to the
-    * driver; it is bounded by [[bucketCount]], the same bound the scoped
-    * merge relies on. Returns a row-SUPERSET of the probed keys (callers
+    * silently miss rows). The touched-bucket set ([[bucketsFor]], one job;
+    * `knownBuckets` skips it) is bounded by [[bucketCount]], the same bound
+    * the scoped merge relies on. Literal key rows with [[literalBuckets]]
+    * as `knownBuckets` plan with no Spark job: the footer schema, the
+    * probe summary and the stats index are all read on the driver.
+    * Returns a row-SUPERSET of the probed keys (callers
     * refine with their own key filter): whole buckets normally, and on a
     * stats-opted table whose [[statsCols]] cover the single bucket-key
     * column, only the files within those buckets whose min/max key range
@@ -442,7 +472,7 @@ final class KeyedParquetTable(
 
   /** [[readForKeys]] with a precomputed touched-bucket set. An incremental
     * maintainer that reads AND merges the same key spread in one batch pays
-    * the distinct+collect bucket job once ([[bucketsFor]]) and reuses the
+    * the bucket job once ([[bucketsFor]]) and reuses the
     * set here and in [[merge]]'s `sourceBuckets` — per-batch job count is
     * the constant every production micro-batch pays. `knownBuckets` must be
     * `bucketsFor` over the same key values as `keysDf` (a superset only
@@ -876,7 +906,7 @@ final class KeyedParquetTable(
     // deleted rows)
     val raw = declaredSchema(dir) match {
       case Some(s) => scanDeclared(s, None, Seq(dir.toString))
-      case None    => spark.read.parquet(dir.toString)
+      case None    => scanParquet(Seq(dir))
     }
     val df = applyDeletes(raw, dir)
     if (bucketCount > 0 && df.columns.contains("__bucket")) df.drop("__bucket") else df
@@ -1445,23 +1475,50 @@ final class KeyedParquetTable(
     cur
   }
 
-  /** Bucket id expression: stable hash of the bucket-key columns. */
-  private def bucketExpr: org.apache.spark.sql.Column =
-    pmod(abs(xxhash64(bucketKeys.map(col): _*)), lit(bucketCount)).cast("int")
+  /** Bucket id of the given bucket-key expressions (order-aligned with
+    * [[bucketKeys]]): the one hash every layout write, probe and metric
+    * uses, so key probes can never silently miss. */
+  private def bucketOf(keyCols: Seq[Column]): Column =
+    pmod(abs(xxhash64(keyCols: _*)), lit(bucketCount)).cast("int")
 
-  /** Distinct bucket ids a key frame hashes into — bounded by bucketCount,
-    * so the driver collect is always safe. MUST stay the same expression as
-    * [[bucketExpr]]/[[withLayout]] or key probes silently miss. Public so a
-    * per-batch maintainer can pay this ONE job and reuse the set across its
+  /** Bucket id expression over this table's own bucket-key columns. */
+  private def bucketExpr: Column = bucketOf(bucketKeys.map(col))
+
+  /** Distinct bucket ids a key frame hashes into, in one Spark job —
+    * bounded by bucketCount, so the collect is always driver-safe. For key
+    * frames computed from data (a merge source, an IVM batch); literal key
+    * rows use [[literalBuckets]], which runs no job. Public so a per-batch
+    * maintainer can pay this ONE job and reuse the set across its
     * [[readForKeys]] probe and [[merge]] commit (`knownBuckets` /
     * `sourceBuckets`).
     */
   def bucketsFor(keysDf: DataFrame): Set[Int] = {
     ensureLayout(stamp = false)
-    distinctInts(keysDf
-      .select(pmod(abs(xxhash64(bucketKeys.map(keysDf(_)): _*)), lit(bucketCount))
-        .cast("int").as("__b")))
+    distinctInts(keysDf.select(bucketOf(bucketKeys.map(keysDf(_))).as("__b")))
   }
+
+  /** [[bucketsFor]] of a frame of literal key rows (`createDataFrame` over
+    * local rows, typed as stored), on the driver: the optimizer folds the
+    * same bucket expression into the local relation, so no Spark job runs.
+    * Refuses any other frame.
+    */
+  def literalBuckets(keysDf: DataFrame): Set[Int] = {
+    ensureLayout(stamp = false)
+    driverRows(keysDf.select(bucketOf(bucketKeys.map(keysDf(_)))))
+      .getOrElse(throw new IllegalArgumentException(
+        "literalBuckets needs literal key rows — use bucketsFor for a computed frame"))
+      .map(_.getInt(0)).toSet
+  }
+
+  /** The rows of a frame whose optimized plan is a local relation (literal
+    * rows and any projection or filter of them, which the optimizer
+    * evaluates on the driver), collected without a Spark job; None for any
+    * other frame. */
+  private def driverRows(df: DataFrame): Option[Array[org.apache.spark.sql.Row]] =
+    df.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(df.collect())
+      case _ => None
+    }
 
   /** Zero-job form of [[bucketsFor]]: an aggregate metric expression a
     * caller attaches with `df.observe(obs, table.bucketSetMetric(...))` so an
@@ -1480,7 +1537,7 @@ final class KeyedParquetTable(
     require(keyCols.length == bucketKeys.length,
       s"need ${bucketKeys.length} key expression(s) for buckets $bucketKeys")
     ensureLayout(stamp = false)
-    val b = pmod(abs(xxhash64(keyCols: _*)), lit(bucketCount)).cast("int")
+    val b = bucketOf(keyCols)
     collect_set(excludeWhen.fold(b)(c => when(c, lit(null)).otherwise(b)))
   }
 
@@ -1666,8 +1723,8 @@ final class KeyedParquetTable(
   private def appendDeleteOverlap(curDir: Path, nextDir: Path,
                                   freshFiles: Seq[String]): Set[Int] = {
     if (!hasDeletes(curDir) || freshFiles.isEmpty) return Set.empty
-    val batchKeys = spark.read.option("basePath", nextDir.toString)
-      .parquet(freshFiles: _*).select(keys.map(col): _*)
+    val batchKeys = scanParquet(freshFiles.map(Paths.get(_)), Some(nextDir))
+      .select(keys.map(col): _*)
     val del = deleteKeySet(curDir).get
       .select(keys.map(k => col(k).as(s"__del_$k")): _*)
     val cond = keys.map(k => batchKeys(k) <=> del(s"__del_$k")).reduce(_ && _)
@@ -1947,8 +2004,7 @@ final class KeyedParquetTable(
                           nextDel: Path, buckets: Int): Unit = {
     val merged =
       if (hit.isEmpty) inc
-      else inc.unionByName(spark.read.option("basePath", curDel.toString)
-        .parquet(hit.map(_.toString): _*)
+      else inc.unionByName(scanParquet(hit, Some(curDel))
         .select((keys.map(col) :+ col(DelBucketCol)): _*)).distinct()
     merged.repartition(math.max(1, buckets), col(DelBucketCol))
       .write.mode("append").partitionBy(DelBucketCol).parquet(nextDel.toString)
@@ -1969,9 +2025,8 @@ final class KeyedParquetTable(
         case Some(bs) =>
           val chosen = deleteShardDirs(del).filter(d => shardIdOf(d).exists(bs))
           if (chosen.isEmpty) None
-          else Some(spark.read.option("basePath", del.toString)
-            .parquet(chosen.map(_.toString): _*))
-        case _ => Some(spark.read.parquet(del.toString))
+          else Some(scanParquet(chosen, Some(del)))
+        case _ => Some(scanParquet(Seq(del)))
       }
     }
 
@@ -2633,7 +2688,7 @@ final class KeyedParquetTable(
     }
     val curDir = versionDir(v)
     val index = Some(statsDirOf(curDir)).filter(Files.exists(_))
-      .map(d => spark.read.parquet(d.toString))
+      .map(d => scanParquet(Seq(d)))
       .filter(ix => parts.forall(_.ixCols.forall(ix.columns.contains)))
     // the buckets whose live rows are scanned; None = the whole table
     val debt: Option[Set[Int]] =
@@ -2718,7 +2773,7 @@ final class KeyedParquetTable(
 
   private def prevStatsOf(prev: Long): Option[DataFrame] = {
     val d = if (prev >= 0) statsDirOf(versionDir(prev)) else null
-    if (d != null && Files.exists(d)) Some(spark.read.parquet(d.toString))
+    if (d != null && Files.exists(d)) Some(scanParquet(Seq(d)))
     else None
   }
 
@@ -2782,16 +2837,20 @@ final class KeyedParquetTable(
     * range, hashed workloads by membership, and both rules keep strict
     * supersets so composition can never lose a row.
     *
-    * Probe ranges are computed PER BUCKET in one narrow job (per-partition
-    * min/max, merged on the driver — O(bucketCount) driver data); the index
-    * itself is O(files) metadata. Safety rules: a bucket probed with a NULL
-    * key keeps all its files (min/max stats cannot attest null-keyed rows),
-    * a file with null bounds is kept, and a touched bucket with no probe
-    * row (caller passed a superset via `knownBuckets`) keeps all its files.
+    * Eligibility is decided first: a table with neither layer reads
+    * nothing. Probe ranges are summarized PER BUCKET — on the driver for
+    * literal key rows ([[driverRows]]), else in one narrow job (per-partition
+    * summaries merged on the driver, O(bucketCount) driver data). The index
+    * is O(files) metadata, read on the driver ([[statsIndex]]), and files
+    * are picked there with [[KeyedParquetTable.cmpAny]] and
+    * [[graft.ops.KeyBloom]], so a literal probe plans with no Spark job.
+    * Safety rules: a bucket probed with a NULL key keeps all its files
+    * (min/max stats cannot attest null-keyed rows), a file with null bounds
+    * is kept, and a touched bucket with no probe row (caller passed a
+    * superset via `knownBuckets`) keeps all its files.
     */
   private def statsKeyPrunedFiles(keysDf: DataFrame, touched: Set[Int],
                                   curDir: Path): Option[Seq[String]] = {
-    if (!Files.exists(statsDirOf(curDir))) return None
     import org.apache.spark.sql.types._
     // RANGE pruning needs a single, driver-orderable bucket-key column
     // covered by statsCols; MEMBERSHIP pruning only needs the bucket-key
@@ -2808,24 +2867,26 @@ final class KeyedParquetTable(
         if (orderable) Some(k) else None
       case _ => None
     }
-    val statsDf = spark.read.parquet(statsDirOf(curDir).toString)
+    if ((rangeCol.isEmpty && bloomKeyBits == 0) || !Files.exists(statsDirOf(curDir)))
+      return None
     // bloom presence is a property of the INDEX on disk (a snapshot
     // written before the table opted in simply has none)
-    val bloomOn = bloomKeyBits > 0 && statsDf.columns.contains(bloomColName)
+    val bloomOn = bloomKeyBits > 0 &&
+      footerSchema(Seq(statsDirOf(curDir))).exists(_.fieldNames.contains(bloomColName))
     if (rangeCol.isEmpty && !bloomOn) return None
     import KeyedParquetTable.cmpAny
     // __h is the SAME xxhash64 over the bucket keys that [[bucketExpr]]
     // and the bloom build use, so bucket ids and membership are bit-exact
     val hashCol = xxhash64(bucketKeys.map(keysDf(_)): _*)
     val probe = keysDf.select(
-      pmod(abs(hashCol), lit(bucketCount)).cast("int").as("__b"),
+      bucketOf(bucketKeys.map(keysDf(_))).as("__b"),
       rangeCol.map(keysDf(_)).getOrElse(lit(null)).as("__k"),
       hashCol.as("__h"))
     // per-bucket probe summary: [lo, hi] range, null flag, and (bloom-opted
     // tables) the distinct probe hash set — capped so a caller that probes
     // far beyond the documented batch-bounded contract degrades to
     // range-only pruning instead of flooding the driver (null set = over
-    // cap). All gathered in the ONE existing narrow job.
+    // cap).
     val hashCap = KeyedParquetTable.bloomProbeHashCap
     // NOTE: mergeInto runs inside mapPartitions and must only capture
     // local vals (bloomOn, hashCap) — a FIELD reference would close over
@@ -2848,7 +2909,7 @@ final class KeyedParquetTable(
         cur._3 || hasNull,
         mergedHs)
     }
-    probe.rdd.mapPartitions { it =>
+    val summarize = (it: Iterator[org.apache.spark.sql.Row]) => {
       val m = scala.collection.mutable.Map.empty[Int, Summary]
       it.foreach { r =>
         val b = r.getInt(0)
@@ -2865,15 +2926,16 @@ final class KeyedParquetTable(
             scala.collection.mutable.Set(r.getLong(2)))
       }
       m.iterator
-    }.collect().foreach { case (b, (lo, hi, hasNull, hs)) =>
+    }
+    driverRows(probe).fold(probe.rdd.mapPartitions(summarize).collect().iterator)(
+      rows => summarize(rows.iterator)).foreach { case (b, (lo, hi, hasNull, hs)) =>
       mergeInto(merged, b, lo, hi, hasNull, hs)
     }
-    // fixed 5-column shape whatever is eligible (absent layers read null);
-    // touched-bucket filter BEFORE collect: the driver pulls only the
-    // probed buckets' index rows — with bloom filters in the index a
-    // full-snapshot pull would be O(files × bloom bytes), no longer the
-    // trivial metadata the min/max-only index was
-    val stats = statsDf.select(col("file_path"), col("bucket"),
+    // fixed 5-column shape whatever is eligible (absent layers read null),
+    // only the probed buckets' rows
+    val stats = statsIndex(curDir, Seq("file_path", "bucket") ++
+        rangeCol.toSeq.flatMap(k => Seq(s"mn_$k", s"mx_$k")) ++
+        (if (bloomOn) Seq(bloomColName) else Nil)).select(col("file_path"), col("bucket"),
         rangeCol.map(k => col(s"mn_$k")).getOrElse(lit(null)).as("__mn"),
         rangeCol.map(k => col(s"mx_$k")).getOrElse(lit(null)).as("__mx"),
         (if (bloomOn) col(bloomColName) else lit(null)).as("__bl"))
@@ -2901,9 +2963,27 @@ final class KeyedParquetTable(
     Some(keep)
   }
 
+  /** The rows of snapshot `dir`'s `_stats` index (only `cols`, when
+    * given), read on the driver by Spark's own parquet reader (graftbridge
+    * `Internals.driverParquet`) as a frame over a local relation: filtering
+    * and collecting it starts no Spark job. The driver holds every row it
+    * reads — O(files), plus `bloomKeyBits / 8` bytes per file when the
+    * bloom column is read. Without a Spark schema in the footer this is an
+    * ordinary scan.
+    */
+  private def statsIndex(dir: Path, cols: Seq[String] = Nil): DataFrame = {
+    val d = statsDirOf(dir)
+    footerSchema(Seq(d)).fold(scanParquet(Seq(d))) { s =>
+      val read = if (cols.isEmpty) s
+        else org.apache.spark.sql.types.StructType(s.filter(f => cols.contains(f.name)))
+      org.apache.spark.sql.graftbridge.Internals.driverParquet(spark, read,
+        walkParquet(d).map(_.toString))
+    }
+  }
+
   /** The persisted stats index of the current snapshot, file paths resolved
-    * to absolute. Requires the snapshot to have been written with
-    * [[statsCols]] set (opt-in tables only).
+    * to absolute, as a local frame ([[statsIndex]]). Requires the snapshot
+    * to have been written with [[statsCols]] set (opt-in tables only).
     */
   def readStats(): DataFrame = {
     val v = currentVersion
@@ -2912,7 +2992,7 @@ final class KeyedParquetTable(
     require(Files.exists(d),
       s"table $root snapshot v$v has no stats index — construct the table " +
         "with statsCols and commit/merge once to build it")
-    spark.read.parquet(d.toString)
+    statsIndex(versionDir(v))
       .withColumn("file_path",
         concat(lit(versionDir(v).toString + "/"), col("file_path")))
   }
@@ -2925,24 +3005,34 @@ final class KeyedParquetTable(
     * bucket pruning on the key dimension × stats pruning on the sort/range
     * dimension, the same two-level pruning an Iceberg (partition, manifest
     * min/max) scan plan does.
+    *
+    * Files are picked on the driver from the local index frame
+    * ([[statsIndex]]) with Spark's own comparison semantics (type coercion,
+    * null bounds never match), so without `forKeys` the read plans with no
+    * Spark job. Pending merge-on-read deletes are applied, scoped to the
+    * chosen files' buckets.
     */
   def readRangePruned(statsCol: String, lo: Any, hi: Any,
                       forKeys: Option[DataFrame] = None): DataFrame = {
     val v = currentVersion
     require(v >= 0, s"table $root has no snapshot")
-    val base = readStats()
+    val dir = versionDir(v)
+    require(Files.exists(statsDirOf(dir)), s"table $root snapshot v$v has no stats index")
+    val base = statsIndex(dir, Seq("file_path", "bucket", s"mn_$statsCol", s"mx_$statsCol"))
     val stats = forKeys.fold(base) { kdf =>
       require(bucketCount > 0,
         "forKeys pruning requires a bucketed table (bucketCount > 0)")
       base.filter(col("bucket").isin(bucketsFor(kdf).toSeq: _*))
     }
-    val files = stats
+    val chosen = stats // O(matching files)
       .filter(col(s"mx_$statsCol") >= lit(lo) && col(s"mn_$statsCol") <= lit(hi))
-      .select("file_path").collect().map(_.getString(0)) // O(matching files)
+      .select("file_path", "bucket").collect()
     val scan =
-      if (files.isEmpty) read().limit(0)
-      else scanDeclared(snapshotSchema(versionDir(v)),
-        Some(versionDir(v).toString), files.toIndexedSeq).drop("__bucket")
+      if (chosen.isEmpty) read().limit(0)
+      else applyDeletes(scanDeclared(snapshotSchema(dir), Some(dir.toString),
+          chosen.map(r => s"$dir/${r.getString(0)}").toIndexedSeq), dir,
+        if (bucketCount > 0) Some(chosen.map(_.getInt(1)).toSet) else None)
+        .drop("__bucket")
     scan.filter(col(statsCol) >= lit(lo) && col(statsCol) <= lit(hi))
   }
 

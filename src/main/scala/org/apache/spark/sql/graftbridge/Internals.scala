@@ -3,14 +3,16 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic
 
-/** The one Spark-internal bridge the engine needs: a V1 streaming
+/** The Spark internals the engine needs, in one place. A V1 streaming
   * [[org.apache.spark.sql.execution.streaming.Source]]'s `getBatch` must
   * return a frame flagged `isStreaming` (MicroBatchExecution asserts it),
   * and the only constructor for that flag — the same one the built-in
-  * file stream source uses — is `private[sql]`. This object lives under
-  * `org.apache.spark.sql` purely to reach it; no other internals are
-  * touched, and the wrapped plan is the ordinary optimized batch plan
-  * (parquet pushdown intact) riding as an RDD scan.
+  * file stream source uses — is `private[sql]`; the wrapped plan is the
+  * ordinary optimized batch plan (parquet pushdown intact) riding as an
+  * RDD scan. The other members reach the same kind of `private[sql]`
+  * constructor: the streaming relation leaf and a local relation over
+  * rows the driver read itself ([[driverParquet]]). This object lives
+  * under `org.apache.spark.sql` purely to reach them.
   */
 object Internals {
   def asStreamingFrame(df: DataFrame): DataFrame = {
@@ -27,6 +29,36 @@ object Internals {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     spark.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = false)
+  }
+
+  /** The rows of parquet `files`, read on the driver by Spark's own parquet
+    * reader (the one a scan task runs), as a frame over a local relation.
+    * For O(files) metadata such as a table's one-file stats index: the
+    * optimizer folds projections and filters of a local relation on the
+    * driver, so selecting from this frame and collecting it start no Spark
+    * job. `schema` is the files' data schema (no partition columns).
+    */
+  def driverParquet(spark: org.apache.spark.sql.SparkSession,
+                    schema: org.apache.spark.sql.types.StructType,
+                    files: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val conf = cs.sessionState.newHadoopConf()
+    val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .buildReaderWithPartitionValues(cs, schema,
+        new org.apache.spark.sql.types.StructType(), schema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    val rows = files.flatMap { f =>
+      val path = new org.apache.hadoop.fs.Path(f)
+      val st = path.getFileSystem(conf).getFileStatus(path)
+      // the reader reuses its row object: copy each row out
+      read(PartitionedFile(InternalRow.empty, org.apache.spark.paths.SparkPath.fromPath(path),
+        0L, st.getLen, Array.empty, st.getModificationTime, st.getLen))
+        .map(_.copy()).toVector
+    }
+    classic.Dataset.ofRows(cs, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema.toNullable), rows))
   }
 
   /** The V1 streaming-relation leaf `readStream.format(source)` would

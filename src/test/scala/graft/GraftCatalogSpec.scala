@@ -226,6 +226,21 @@ class GraftCatalogSpec extends SparkSpec {
       .head().getLong(0) === 100L)
   }
 
+  test("a pushed range read honours merge-on-read deletes") {
+    sql("DROP TABLE IF EXISTS graft.spec.rangedel")
+    sql("""CREATE TABLE graft.spec.rangedel (id BIGINT, price DOUBLE)
+           PARTITIONED BY (bucket(4, id))
+           TBLPROPERTIES ('graft.keys'='id', 'graft.statsCols'='price')""")
+    sql("INSERT INTO graft.spec.rangedel SELECT id, CAST(id * 10 AS DOUBLE) FROM range(100)")
+    sql("DELETE FROM graft.spec.rangedel WHERE id < 50")
+    assert(sql("SELECT count(*) FROM graft.spec.rangedel").head().getLong(0) === 50L)
+    val ranged = sql("SELECT count(*) FROM graft.spec.rangedel WHERE price BETWEEN 0 AND 2000")
+    assert(ranged.head().getLong(0) === 50L)
+    assert(sql("SELECT min(id) FROM graft.spec.rangedel WHERE price BETWEEN 0 AND 600")
+      .head().getLong(0) === 50L)
+    sql("DROP TABLE graft.spec.rangedel")
+  }
+
   test("ALTER TABLE: add / rename / drop column and TBLPROPERTIES via SQL") {
     sql("DROP TABLE IF EXISTS graft.spec.alt")
     sql("""CREATE TABLE graft.spec.alt (id BIGINT, v BIGINT)
@@ -1099,6 +1114,33 @@ class GraftCatalogSpec extends SparkSpec {
     assert(pushedFour.head() === graftCatalog.tableFor(Identifier.of(Array("spec"), "aggj"))
       .read().agg(count(lit(1)), min("price"), max("price"), sum("price")).head())
     sql("DROP TABLE graft.spec.aggj")
+    // literal reads plan from metadata on the driver: every statement
+    // resolves a fresh table instance, and planning a literal point read
+    // (plain bucketed, and with stats covering the key plus bloom filters),
+    // a literal range read and a VERSION AS OF count starts no Spark job
+    for ((t, props) <- Seq(
+        "planj" -> "'graft.statsCols'='price'",
+        "planb" -> "'graft.statsCols'='id,price', 'graft.bloomKeyBits'='256'")) {
+      sql(s"DROP TABLE IF EXISTS graft.spec.$t")
+      sql(s"""CREATE TABLE graft.spec.$t (id BIGINT, price BIGINT)
+              PARTITIONED BY (bucket(8, id))
+              TBLPROPERTIES ('graft.keys'='id', $props)""")
+      // a full-state commit pins no declared schema: reads take it from a footer
+      sql(s"INSERT OVERWRITE graft.spec.$t SELECT id, (id * 37) % 1000 FROM range(1000)")
+      val before = graftCatalog.tableFor(Identifier.of(Array("spec"), t)).currentVersion
+      sql(s"INSERT INTO graft.spec.$t SELECT id, (id * 37) % 1000 FROM range(1000, 1200)")
+      val reads = Seq(
+        s"SELECT id, price FROM graft.spec.$t WHERE id IN (3, 17, 1100)" ->
+          Seq(Seq(3L, 111L), Seq(17L, 629L), Seq(1100L, 700L)),
+        s"SELECT count(*), sum(price) FROM graft.spec.$t WHERE price BETWEEN 100 AND 199" ->
+          Seq(Seq(124L, 18418L)),
+        s"SELECT count(*) FROM graft.spec.$t VERSION AS OF $before" -> Seq(Seq(1000L)))
+      reads.foreach { case (q, want) =>
+        assert(jobsStartedBy(sql(q).queryExecution.executedPlan) === 0, s"planning: $q")
+        assert(sql(q).collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq === want, q)
+      }
+      sql(s"DROP TABLE graft.spec.$t")
+    }
   }
 
   test("COUNT(col) pushdown: nl_ null counts answer scan-free; stale/debt/decimal shapes decline") {

@@ -128,6 +128,10 @@ class KeyBloomSpec extends SparkSpec {
       .filter(p => touchedDirs.exists(d => p.contains(s"/$d/"))).toSet
     assert(scanned.nonEmpty && scanned.size < bucketFiles.size,
       s"expected a strict file subset: ${scanned.size} of ${bucketFiles.size}")
+    // a computed key frame summarizes its probes in a job, literal rows on
+    // the driver: both keep the same files
+    assert(t.readForKeys(spark.createDataFrame(probes.rdd, probes.schema))
+      .inputFiles.toSet === scanned)
     // maintenance keeps the filters fresh: compaction rewrites fragmented
     // buckets and recollects their blooms in the same commit
     assert(t.compact(minInputFiles = 2).isDefined)

@@ -1907,6 +1907,66 @@ class KeyedParquetTableSpec extends SparkSpec {
     // a mismatched-layout open refuses the metric like every other probe
     val wrong = new KeyedParquetTable(spark, root, Seq("id"), Nil, 4)
     intercept[IllegalStateException] { wrong.bucketSetMetric(Seq(col("id"))) }
+    // literal key rows hash on the driver to the same buckets, key type by
+    // key type (the frame path reads the keys back from parquet, so its
+    // bucket job evaluates them in tasks)
+    import org.apache.spark.sql.Row
+    val keyed = Seq(
+      Seq(StructField("k", IntegerType)) -> Seq(Seq(0), Seq(7), Seq(-3), Seq(null)),
+      Seq(StructField("k", LongType)) -> Seq(Seq(0L), Seq(7L), Seq(Long.MaxValue)),
+      Seq(StructField("k", StringType)) -> Seq(Seq("a"), Seq(""), Seq("2024-01-05")),
+      Seq(StructField("k", DecimalType(12, 2))) ->
+        Seq(Seq(BigDecimal("1.50").bigDecimal), Seq(BigDecimal("-99.99").bigDecimal)),
+      Seq(StructField("k", DateType)) ->
+        Seq(Seq(java.sql.Date.valueOf("2024-01-05")), Seq(java.sql.Date.valueOf("1969-12-31"))),
+      Seq(StructField("k", LongType), StructField("k2", StringType)) ->
+        Seq(Seq(1L, "x"), Seq(1L, "y"), Seq(2L, null)))
+    keyed.zipWithIndex.foreach { case ((fields, rows), i) =>
+      val names = fields.map(_.name)
+      val tk = new KeyedParquetTable(spark, tmpDir(s"kpt_lit_buckets_$i"), names, Nil, 16)
+      val lits = spark.createDataFrame(rows.map(Row.fromSeq).asJava, StructType(fields))
+      val stored = tmpDir(s"kpt_lit_keys_$i")
+      lits.write.mode("overwrite").parquet(stored)
+      val fromFrame = tk.bucketsFor(spark.read.parquet(stored))
+      assert(jobsStartedBy(assert(tk.literalBuckets(lits) === fromFrame, names)) === 0)
+    }
+    intercept[IllegalArgumentException] {
+      t.literalBuckets(spark.read.parquet(t.root + s"/v${t.currentVersion}").select("id"))
+    }
+  }
+
+  test("scanParquet's footer schema is the schema Spark's inference gives") {
+    import java.nio.file.Paths
+    def same(t: KeyedParquetTable, sub: String*): Unit = {
+      val d = Paths.get(t.root, (s"v${t.currentVersion}" +: sub): _*)
+      assert(java.nio.file.Files.exists(d), d)
+      assert(t.scanParquet(Seq(d)).schema === spark.read.parquet(d.toString).schema, d)
+    }
+    val rows = (0L until 40L).map(i => (i, s"v$i", i * 1.5,
+      if (i % 2 == 0) "2024-01-05" else "2024-02-29", (i % 3).toString))
+      .toDF("id", "v", "price", "day", "grp")
+    val plain = new KeyedParquetTable(spark, tmpDir("kpt_foot_plain"), Seq("id"),
+      statsCols = Seq("price"))
+    val bucketed = new KeyedParquetTable(spark, tmpDir("kpt_foot_bkt"), Seq("id"),
+      bucketCount = 4, statsCols = Seq("price"), bloomKeyBits = 128)
+    // string partition values that read back as a date and as an int
+    val byDay = new KeyedParquetTable(spark, tmpDir("kpt_foot_day"), Seq("id"),
+      partitionBy = Seq("day"), bucketCount = 4)
+    val byGrp = new KeyedParquetTable(spark, tmpDir("kpt_foot_grp"), Seq("id"),
+      partitionBy = Seq("grp"))
+    Seq(plain, bucketed, byDay, byGrp).foreach { t =>
+      t.commit(rows)
+      same(t)
+      t.deleteWhere(col("id") < 5)
+      same(t)
+      same(t, "_deletes")
+    }
+    same(plain, "_stats")
+    same(bucketed, "_stats")
+    def inferred(t: KeyedParquetTable, c: String) =
+      spark.read.parquet(Paths.get(t.root, s"v${t.currentVersion}").toString).schema(c).dataType
+    assert(inferred(byDay, "day") === DateType)
+    assert(inferred(byGrp, "grp") === IntegerType)
   }
 
   test("declared schema survives append and expire after evolution") {

@@ -318,8 +318,7 @@ final class GraftScanBuilder(table: GraftTable)
         Try {
           val probe = kpt.spark.createDataFrame(
             combos.map(Row.fromSeq).asJava, keyFields)
-          (kpt.readForKeys(probe, Some(kpt.literalBuckets(probe))),
-            s"buckets[${kpt.bucketKeys.mkString(",")}]")
+          (kpt.readForKeys(probe), s"buckets[${kpt.bucketKeys.mkString(",")}]")
         }.getOrElse(fallback)
       } else {
         kpt.statsCols.iterator.map(c => c -> rangeBounds(c, pushed)).collectFirst {

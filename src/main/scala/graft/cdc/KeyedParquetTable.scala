@@ -451,11 +451,12 @@ final class KeyedParquetTable(
     * `keysDf` must carry the table's [[bucketKeys]] columns under their own
     * names and with the stored key types (the bucket id is a hash OF THE
     * VALUES — a differently-typed key would hash into the wrong bucket and
-    * silently miss rows). The touched-bucket set ([[bucketsFor]], one job;
-    * `knownBuckets` skips it) is bounded by [[bucketCount]], the same bound
-    * the scoped merge relies on. Literal key rows with [[literalBuckets]]
-    * as `knownBuckets` plan with no Spark job: the footer schema, the
-    * probe summary and the stats index are all read on the driver.
+    * silently miss rows). The touched-bucket set ([[bucketsFor]]) is
+    * bounded by [[bucketCount]], the same bound the scoped merge relies on.
+    * Literal key rows plan with no Spark job: their bucket ids, the footer
+    * schema, the probe summary and the stats index are all read on the
+    * driver; a computed key frame costs one bucket job (`knownBuckets`
+    * skips it).
     * Returns a row-SUPERSET of the probed keys (callers
     * refine with their own key filter): whole buckets normally, and on a
     * stats-opted table whose [[statsCols]] cover the single bucket-key
@@ -1484,30 +1485,18 @@ final class KeyedParquetTable(
   /** Bucket id expression over this table's own bucket-key columns. */
   private def bucketExpr: Column = bucketOf(bucketKeys.map(col))
 
-  /** Distinct bucket ids a key frame hashes into, in one Spark job —
-    * bounded by bucketCount, so the collect is always driver-safe. For key
-    * frames computed from data (a merge source, an IVM batch); literal key
-    * rows use [[literalBuckets]], which runs no job. Public so a per-batch
-    * maintainer can pay this ONE job and reuse the set across its
-    * [[readForKeys]] probe and [[merge]] commit (`knownBuckets` /
-    * `sourceBuckets`).
+  /** Distinct bucket ids a key frame hashes into — bounded by
+    * bucketCount, so the collect is always driver-safe. Literal key rows
+    * (a local relation, [[driverRows]]) are hashed on the driver with no
+    * Spark job; a frame computed from data (a merge source, an IVM batch)
+    * costs one job. Public so a per-batch maintainer can pay that ONE job
+    * and reuse the set across its [[readForKeys]] probe and [[merge]]
+    * commit (`knownBuckets` / `sourceBuckets`).
     */
   def bucketsFor(keysDf: DataFrame): Set[Int] = {
     ensureLayout(stamp = false)
-    distinctInts(keysDf.select(bucketOf(bucketKeys.map(keysDf(_))).as("__b")))
-  }
-
-  /** [[bucketsFor]] of a frame of literal key rows (`createDataFrame` over
-    * local rows, typed as stored), on the driver: the optimizer folds the
-    * same bucket expression into the local relation, so no Spark job runs.
-    * Refuses any other frame.
-    */
-  def literalBuckets(keysDf: DataFrame): Set[Int] = {
-    ensureLayout(stamp = false)
-    driverRows(keysDf.select(bucketOf(bucketKeys.map(keysDf(_)))))
-      .getOrElse(throw new IllegalArgumentException(
-        "literalBuckets needs literal key rows — use bucketsFor for a computed frame"))
-      .map(_.getInt(0)).toSet
+    val ids = keysDf.select(bucketOf(bucketKeys.map(keysDf(_))).as("__b"))
+    driverRows(ids).fold(distinctInts(ids))(_.map(_.getInt(0)).toSet)
   }
 
   /** The rows of a frame whose optimized plan is a local relation (literal
@@ -2931,19 +2920,18 @@ final class KeyedParquetTable(
       rows => summarize(rows.iterator)).foreach { case (b, (lo, hi, hasNull, hs)) =>
       mergeInto(merged, b, lo, hi, hasNull, hs)
     }
-    // fixed 5-column shape whatever is eligible (absent layers read null),
-    // only the probed buckets' rows
+    // fixed 5-column shape whatever is eligible (absent layers read null);
+    // only the probed buckets' rows are read into the driver
     val stats = statsIndex(curDir, Seq("file_path", "bucket") ++
         rangeCol.toSeq.flatMap(k => Seq(s"mn_$k", s"mx_$k")) ++
-        (if (bloomOn) Seq(bloomColName) else Nil)).select(col("file_path"), col("bucket"),
+        (if (bloomOn) Seq(bloomColName) else Nil), Some(touched))
+      .select(col("file_path"), col("bucket"),
         rangeCol.map(k => col(s"mn_$k")).getOrElse(lit(null)).as("__mn"),
         rangeCol.map(k => col(s"mx_$k")).getOrElse(lit(null)).as("__mx"),
         (if (bloomOn) col(bloomColName) else lit(null)).as("__bl"))
-      .filter(col("bucket").isin(touched.toSeq: _*))
       .collect()
     val keep = stats.iterator.filter { r =>
-      val b = r.getInt(1)
-      touched.contains(b) && (merged.get(b) match {
+      merged.get(r.getInt(1)) match {
         case None => true // superset bucket with no probe rows: keep whole
         case Some((lo, hi, hasNull, hs)) =>
           // range: null probe keys / null file bounds cannot be attested —
@@ -2958,26 +2946,36 @@ final class KeyedParquetTable(
           val bloomOk = !bloomOn || hs == null || r.isNullAt(4) ||
             hs.exists(graft.ops.KeyBloom.mightContain(r.getAs[Array[Byte]](4), _))
           rangeOk && bloomOk
-      })
+      }
     }.map(r => curDir.toString + "/" + r.getString(0)).toVector
     Some(keep)
   }
 
   /** The rows of snapshot `dir`'s `_stats` index (only `cols`, when
-    * given), read on the driver by Spark's own parquet reader (graftbridge
-    * `Internals.driverParquet`) as a frame over a local relation: filtering
-    * and collecting it starts no Spark job. The driver holds every row it
-    * reads — O(files), plus `bloomKeyBits / 8` bytes per file when the
-    * bloom column is read. Without a Spark schema in the footer this is an
-    * ordinary scan.
+    * given; only the rows of `buckets`, when given), read on the driver by
+    * Spark's own parquet reader (graftbridge `Internals.driverParquet`) as
+    * a frame over a local relation: filtering and collecting it starts no
+    * Spark job. The bucket filter runs as each row is read, BEFORE the
+    * driver copies it: with bloom filters in the index a full pull would
+    * be O(files × bloom bytes), no longer the trivial metadata a
+    * min/max-only index is, so a probe holds only its touched buckets'
+    * rows. Without a Spark schema in the footer this is an ordinary scan.
     */
-  private def statsIndex(dir: Path, cols: Seq[String] = Nil): DataFrame = {
+  private def statsIndex(dir: Path, cols: Seq[String] = Nil,
+                         buckets: Option[Set[Int]] = None): DataFrame = {
     val d = statsDirOf(dir)
-    footerSchema(Seq(d)).fold(scanParquet(Seq(d))) { s =>
+    footerSchema(Seq(d)).fold {
+      val ix = scanParquet(Seq(d))
+      buckets.fold(ix)(bs => ix.filter(col("bucket").isin(bs.toSeq: _*)))
+    } { s =>
       val read = if (cols.isEmpty) s
         else org.apache.spark.sql.types.StructType(s.filter(f => cols.contains(f.name)))
+      val keep = buckets.fold((_: org.apache.spark.sql.catalyst.InternalRow) => true) { bs =>
+        val b = read.fieldIndex("bucket")
+        r => !r.isNullAt(b) && bs.contains(r.getInt(b))
+      }
       org.apache.spark.sql.graftbridge.Internals.driverParquet(spark, read,
-        walkParquet(d).map(_.toString))
+        walkParquet(d).map(_.toString), keep)
     }
   }
 
@@ -3008,9 +3006,9 @@ final class KeyedParquetTable(
     *
     * Files are picked on the driver from the local index frame
     * ([[statsIndex]]) with Spark's own comparison semantics (type coercion,
-    * null bounds never match), so without `forKeys` the read plans with no
-    * Spark job. Pending merge-on-read deletes are applied, scoped to the
-    * chosen files' buckets.
+    * null bounds never match), so the read plans with no Spark job unless
+    * `forKeys` is a computed frame (its [[bucketsFor]] job). Pending
+    * merge-on-read deletes are applied, scoped to the chosen files' buckets.
     */
   def readRangePruned(statsCol: String, lo: Any, hi: Any,
                       forKeys: Option[DataFrame] = None): DataFrame = {
@@ -3018,13 +3016,13 @@ final class KeyedParquetTable(
     require(v >= 0, s"table $root has no snapshot")
     val dir = versionDir(v)
     require(Files.exists(statsDirOf(dir)), s"table $root snapshot v$v has no stats index")
-    val base = statsIndex(dir, Seq("file_path", "bucket", s"mn_$statsCol", s"mx_$statsCol"))
-    val stats = forKeys.fold(base) { kdf =>
+    val buckets = forKeys.map { kdf =>
       require(bucketCount > 0,
         "forKeys pruning requires a bucketed table (bucketCount > 0)")
-      base.filter(col("bucket").isin(bucketsFor(kdf).toSeq: _*))
+      bucketsFor(kdf)
     }
-    val chosen = stats // O(matching files)
+    val chosen = statsIndex(dir, // O(matching files)
+        Seq("file_path", "bucket", s"mn_$statsCol", s"mx_$statsCol"), buckets)
       .filter(col(s"mx_$statsCol") >= lit(lo) && col(s"mn_$statsCol") <= lit(hi))
       .select("file_path", "bucket").collect()
     val scan =

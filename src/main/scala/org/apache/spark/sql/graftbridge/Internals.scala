@@ -31,16 +31,20 @@ object Internals {
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
-  /** The rows of parquet `files`, read on the driver by Spark's own parquet
-    * reader (the one a scan task runs), as a frame over a local relation.
-    * For O(files) metadata such as a table's one-file stats index: the
-    * optimizer folds projections and filters of a local relation on the
-    * driver, so selecting from this frame and collecting it start no Spark
-    * job. `schema` is the files' data schema (no partition columns).
+  /** The rows of parquet `files` that satisfy `keep`, read on the driver
+    * by Spark's own parquet reader (the one a scan task runs), as a frame
+    * over a local relation. For O(files) metadata such as a table's
+    * one-file stats index: the optimizer folds projections and filters of
+    * a local relation on the driver, so selecting from this frame and
+    * collecting it start no Spark job. `schema` is the files' data schema
+    * (no partition columns). `keep` sees each row as it is read, before
+    * the driver copies it: rows it drops are never held.
     */
   def driverParquet(spark: org.apache.spark.sql.SparkSession,
                     schema: org.apache.spark.sql.types.StructType,
-                    files: Seq[String]): DataFrame = {
+                    files: Seq[String],
+                    keep: org.apache.spark.sql.catalyst.InternalRow => Boolean = _ => true)
+  : DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
     val cs = spark.asInstanceOf[classic.SparkSession]
@@ -52,10 +56,10 @@ object Internals {
     val rows = files.flatMap { f =>
       val path = new org.apache.hadoop.fs.Path(f)
       val st = path.getFileSystem(conf).getFileStatus(path)
-      // the reader reuses its row object: copy each row out
+      // the reader reuses its row object: copy each kept row out
       read(PartitionedFile(InternalRow.empty, org.apache.spark.paths.SparkPath.fromPath(path),
         0L, st.getLen, Array.empty, st.getModificationTime, st.getLen))
-        .map(_.copy()).toVector
+        .filter(keep).map(_.copy()).toVector
     }
     classic.Dataset.ofRows(cs, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
       org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema.toNullable), rows))

@@ -1907,9 +1907,9 @@ class KeyedParquetTableSpec extends SparkSpec {
     // a mismatched-layout open refuses the metric like every other probe
     val wrong = new KeyedParquetTable(spark, root, Seq("id"), Nil, 4)
     intercept[IllegalStateException] { wrong.bucketSetMetric(Seq(col("id"))) }
-    // literal key rows hash on the driver to the same buckets, key type by
-    // key type (the frame path reads the keys back from parquet, so its
-    // bucket job evaluates them in tasks)
+    // bucketsFor hashes literal key rows on the driver, with no job, to the
+    // same buckets as the same keys read back from parquet (a computed
+    // frame, whose bucket job evaluates them in tasks), key type by key type
     import org.apache.spark.sql.Row
     val keyed = Seq(
       Seq(StructField("k", IntegerType)) -> Seq(Seq(0), Seq(7), Seq(-3), Seq(null)),
@@ -1927,11 +1927,10 @@ class KeyedParquetTableSpec extends SparkSpec {
       val lits = spark.createDataFrame(rows.map(Row.fromSeq).asJava, StructType(fields))
       val stored = tmpDir(s"kpt_lit_keys_$i")
       lits.write.mode("overwrite").parquet(stored)
-      val fromFrame = tk.bucketsFor(spark.read.parquet(stored))
-      assert(jobsStartedBy(assert(tk.literalBuckets(lits) === fromFrame, names)) === 0)
-    }
-    intercept[IllegalArgumentException] {
-      t.literalBuckets(spark.read.parquet(t.root + s"/v${t.currentVersion}").select("id"))
+      val frame = spark.read.parquet(stored)
+      var fromFrame = Set.empty[Int]
+      assert(jobsStartedBy { fromFrame = tk.bucketsFor(frame) } === 1, names)
+      assert(jobsStartedBy(assert(tk.bucketsFor(lits) === fromFrame, names)) === 0)
     }
   }
 

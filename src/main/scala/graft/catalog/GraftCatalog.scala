@@ -78,15 +78,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
         catch { case _: Throwable => () }
       }
     }
-    // join-planning statistics for this catalog's V1-bridged scans (see
-    // GraftStats): the rewrite must run AFTER pushdown, and the only
-    // logical hook that does is the session's post-hoc extraOptimizations
-    // batch — registered here because the catalog initializes (during
-    // analysis) strictly before any graft query reaches the optimizer.
+    // catalog reads run as one plan (see GraftScanInline): the rule must
+    // run AFTER pushdown builds the scan, and the only logical hook that
+    // does is the session's post-hoc extraOptimizations batch — registered
+    // here because the catalog initializes (during analysis, with its
+    // session active) strictly before any graft query reaches the optimizer
     org.apache.spark.sql.SparkSession.getActiveSession.foreach { s =>
-      if (!s.experimental.extraOptimizations.contains(GraftStatsRule))
+      if (!s.experimental.extraOptimizations.contains(GraftScanInline))
         s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ GraftStatsRule
+          s.experimental.extraOptimizations :+ GraftScanInline
     }
   }
 

@@ -5,12 +5,16 @@ import java.util.{Set => JSet}
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SQLContext}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TruncatableTable}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -36,21 +40,21 @@ private[catalog] object Pin {
   * `/root/reference/src/processor/spark_batch.py:273-280`, DDL at
   * `spark_batch.py:71-96`, metadata at `validation.py:731-740`).
   *
-  * Read path: [[V1Scan]] over the table's OWN read plan. This is a
-  * deliberate architectural choice, not a shortcut — `KeyedParquetTable`
-  * reads are already full DataFrame plans carrying semantics a raw
-  * file-scan delegate would silently drop (merge-on-read delete
-  * anti-joins, rename-history coalesce resolution, declared-schema
-  * evolution, file-less snapshots), so the scan re-USES that plan and the
-  * V1 bridge hands Spark its RDD. Pushdown still reaches the engine's
-  * physical pruning BEFORE any row materializes: bucket-key equalities
-  * select bucket directories ([[KeyedParquetTable.readForKeys]] — the
-  * two-level bucket × file-stats prune), stats-column ranges select files
+  * Read path: the table's OWN read plan, inlined into the statement.
+  * `KeyedParquetTable` reads are already full DataFrame plans carrying
+  * semantics a raw file-scan delegate would silently drop (merge-on-read
+  * delete anti-joins, rename-history coalesce resolution, declared-schema
+  * evolution, file-less snapshots), so [[GraftScanBuilder]] builds the
+  * pruned read as such a plan and [[GraftScanInline]] puts its optimized
+  * form in place of the scan relation: Spark plans the statement once,
+  * and the vectorized parquet scan feeds whole-stage codegen with no Row
+  * conversion in between. Pushdown still reaches the engine's physical
+  * pruning: bucket-key equalities select bucket directories
+  * ([[KeyedParquetTable.readForKeys]] — the two-level bucket × file-stats
+  * prune), stats-column ranges select files
   * ([[KeyedParquetTable.readRangePruned]]), and every pushed predicate is
-  * also applied INSIDE the inner plan, where Catalyst forwards it to the
-  * vectorized parquet scan. The Row boundary therefore costs one
-  * InternalRow→Row→InternalRow hop ONLY for rows that survive pruning and
-  * filtering — the same rows a native DSv2 Batch would have emitted.
+  * also applied inside the inner plan, where Catalyst forwards it to the
+  * parquet scan.
   *
   * Planning, like an Iceberg scan planned from manifests, reads only
   * metadata, on the driver: the schema from one parquet footer (or the
@@ -335,8 +339,7 @@ final class GraftScanBuilder(table: GraftTable)
     }
     val (base, pruneMode) = prunedBase()
     // re-apply translatable predicates inside the inner plan: Catalyst
-    // pushes them to the nested vectorized parquet scan, so rows are
-    // filtered before the V1 Row boundary
+    // pushes them to its parquet scan (row-group skipping in the kept files)
     val filtered = pushed.flatMap(GraftScanBuilder.translate)
       .foldLeft(base)((df, c) => df.filter(c))
     val projected = required match {
@@ -375,100 +378,49 @@ private[catalog] object GraftScanBuilder {
   }
 }
 
-/** The built scan: a V1 bridge handing Spark the inner plan's RDD. The
-  * inner DataFrame is the fully pruned + filtered + projected engine read.
-  *
-  * Reports [[SupportsReportStatistics]] from the PRUNED scan's actual
-  * input-file bytes (a driver-side fs stat per surviving file — no job).
-  * Without this, a V2 relation plans with `defaultSizeInBytes` (max), so
-  * SQL joins against engine tables would NEVER auto-broadcast a small
-  * side — at scale that turns every dim join into a shuffle. With it, the
-  * size shrinks with bucket/stats pruning too, so a pruned probe join
-  * broadcasts even when the full table wouldn't.
+/** The built scan: the fully pruned, filtered and projected engine read
+  * (`inner`) and the prune that chose its files. Spark never executes it
+  * as a DSv2 scan: once pushdown has built it, [[GraftScanInline]] puts
+  * `inner`'s optimized plan in the scan relation's place, so the statement
+  * and the read are planned as one query — the parquet file scan feeds
+  * whole-stage codegen directly, and join statistics are the inlined
+  * plan's own (the pruned files' bytes, a metadata frame's local size).
   */
 final class GraftScan(val inner: DataFrame,
-                      val pruneMode: String, pushed: Array[Filter])
-    extends V1Scan with SupportsReportStatistics {
+                      val pruneMode: String, pushed: Array[Filter]) extends Scan {
 
   override def readSchema(): StructType = inner.schema
 
   override def description(): String =
     s"graft prune=$pruneMode pushed=[${pushed.mkString(", ")}]"
 
-  private[catalog] lazy val inputBytesCached: Long = GraftScan.inputBytes(inner)
-
-  override def estimateStatistics(): Statistics = {
-    val bytes = inputBytesCached
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.empty() // exact rows need the _stats job; size drives join planning
-    }
-  }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = inner.schema
-      override def buildScan(): RDD[Row] = inner.rdd
-      override def sizeInBytes: Long = GraftScan.inputBytes(inner)
-    }.asInstanceOf[T]
+  override def toBatch(): Batch = throw new IllegalStateException(
+    s"${description()} reached physical planning without being inlined: " +
+      "graft.catalog.GraftScanInline must be in the session's extraOptimizations " +
+      "(GraftCatalog.initialize registers it in the session active when the catalog loads)")
 }
 
-private[catalog] object GraftScan {
-  /** Total bytes of the plan's surviving input files. `inputFiles` is a
-    * driver-side walk of the plan's file indexes (already listed — no
-    * job); a frame with no file inputs (metadata tables, empty snapshots)
-    * reports its local-relation estimate instead of zero so tiny frames
-    * stay broadcastable without lying about true file-backed size.
-    */
-  def inputBytes(inner: DataFrame): Long = {
-    val files = inner.inputFiles
-    if (files.isEmpty)
-      inner.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong
-    else {
-      // stat through java.nio for local paths; non-local files go through
-      // their Hadoop FileSystem ONE listStatus PER PARENT DIRECTORY (a
-      // remote table's files cluster in a few bucket/partition dirs — a
-      // per-file getFileStatus would pay O(files) sequential RPCs at PLAN
-      // time). An UN-stat-able file must make the whole estimate
-      // CONSERVATIVE (the session default, effectively "never
-      // auto-broadcast"), never count as 0 — a huge remote table reported
-      // as ~0 bytes gets auto-broadcast, the opposite failure of the
-      // defaultSizeInBytes problem this estimator exists to fix.
-      var total = 0L
-      val remote = Seq.newBuilder[String]
-      files.foreach { f =>
-        try total += java.nio.file.Files.size(java.nio.file.Paths.get(new java.net.URI(f)))
-        catch { case _: Exception =>
-          try total += java.nio.file.Files.size(java.nio.file.Paths.get(f))
-          catch { case _: Exception => remote += f }
-        }
-      }
-      val allStatted = {
-        val rem = remote.result()
-        rem.isEmpty || {
-          try {
-            val hconf = inner.sparkSession.sessionState.newHadoopConf()
-            rem.groupBy(f => new org.apache.hadoop.fs.Path(f).getParent)
-              .forall { case (dir, names) =>
-                val fs = dir.getFileSystem(hconf)
-                val listed = fs.listStatus(dir)
-                  .map(s => s.getPath.toUri.getPath -> s.getLen).toMap
-                names.forall { f =>
-                  val p = new org.apache.hadoop.fs.Path(f).toUri.getPath
-                  listed.get(p).exists { len => total += len; true }
-                }
-              }
-          } catch { case _: Exception => false }
-        }
-      }
-      if (allStatted) total
-      else inner.sparkSession.sessionState.conf.defaultSizeInBytes
-    }
+/** Replaces every scan relation whose scan is a [[GraftScan]] with the
+  * scan's inner optimized plan under a projection that keeps each output
+  * attribute's exprId and name, so the rest of the statement is untouched.
+  * It runs in the session's `extraOptimizations` (registered by
+  * [[GraftCatalog.initialize]]), the one logical hook that runs after
+  * `V2ScanRelationPushDown` has built the scan; subquery plans (dynamic
+  * pruning, runtime filters) are rewritten too.
+  */
+object GraftScanInline extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+    case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[GraftScan] =>
+      val inner = r.scan.asInstanceOf[GraftScan].inner.queryExecution.optimizedPlan
+      require(inner.output.length == r.output.length &&
+        inner.output.zip(r.output).forall { case (i, o) =>
+          DataTypeUtils.equalsIgnoreNullability(i.dataType, o.dataType) },
+        s"graft scan output ${r.output.mkString(", ")} does not match its read " +
+          inner.output.mkString(", "))
+      Project(r.output.zip(inner.output).map { case (o, i) =>
+        Alias(i, o.name)(exprId = o.exprId, qualifier = o.qualifier,
+          explicitMetadata = Some(o.metadata))
+      }, inner)
   }
 }
 
@@ -478,7 +430,7 @@ private[catalog] object GraftScan {
   * `.metadata`). Resolved by the catalog when a multipart identifier's
   * last segment names a metadata view of an existing table. The frames
   * are driver-side metadata walks (O(files)/O(snapshots), never data
-  * scans), so the scan is a plain V1 bridge with column pruning only.
+  * scans), so the scan pushes down column pruning only.
   */
 final class GraftMetaTable(ident: String, frame: () => DataFrame)
     extends Table with SupportsRead {

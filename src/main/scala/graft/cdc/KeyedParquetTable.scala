@@ -131,8 +131,12 @@ final class KeyedParquetTable(
     */
   private def footerSchema(paths: Seq[Path]): Option[org.apache.spark.sql.types.StructType] =
     paths.iterator.flatMap(walkParquet).nextOption().flatMap { f =>
+      // the session's Hadoop conf: the reader's default options would build
+      // (and load) a fresh Configuration per footer
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        new org.apache.parquet.io.LocalInputFile(f))
+        new org.apache.parquet.io.LocalInputFile(f),
+        org.apache.parquet.HadoopReadOptions.builder(
+          org.apache.spark.sql.graftbridge.Internals.hadoopConf(spark)).build())
       try Option(r.getFileMetaData.getKeyValueMetaData
         .get("org.apache.spark.sql.parquet.row.metadata"))
       finally r.close()

@@ -97,13 +97,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // UPDATE ... WHERE / DELETE FROM ... WHERE text → the engine's own
     // predicate-DML verbs (same claim pattern as MERGE; see GraftDml)
     ext.injectPostHocResolutionRule(s => graft.catalog.GraftDmlRule(s))
-    // join-planning statistics for V1-bridged catalog scans: Spark's
-    // V1ScanWrapper hides SupportsReportStatistics, so engine tables would
-    // plan at defaultSizeInBytes (never broadcast). The rewrite rule must
-    // run AFTER pushdown builds the scan, and every logical extension hook
-    // (operator-optimization, pre-CBO) runs BEFORE it — so GraftCatalog
-    // .initialize registers GraftStatsRule into the session's post-hoc
-    // extraOptimizations; only the leaf's planner strategy lives here.
-    ext.injectPlannerStrategy(_ => graft.catalog.GraftStatsStrategy)
+    // catalog reads are inlined into the statement by GraftScanInline, which
+    // must run after scan pushdown — later than any hook offered here — so
+    // GraftCatalog.initialize registers it in the session's extraOptimizations
   }
 }

@@ -31,14 +31,21 @@ object Internals {
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
+  /** The session's Hadoop configuration (its SQL settings included), for
+    * reads the driver makes itself. */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
   /** The rows of parquet `files` that satisfy `keep`, read on the driver
-    * by Spark's own parquet reader (the one a scan task runs), as a frame
-    * over a local relation. For O(files) metadata such as a table's
-    * one-file stats index: the optimizer folds projections and filters of
-    * a local relation on the driver, so selecting from this frame and
-    * collecting it start no Spark job. `schema` is the files' data schema
-    * (no partition columns). `keep` sees each row as it is read, before
-    * the driver copies it: rows it drops are never held.
+    * by Spark's own parquet record reader (the one a row-based scan task
+    * runs, with the settings `ParquetFileFormat` gives its tasks, but no
+    * broadcast of them), as a frame over a local relation. For O(files)
+    * metadata such as a table's one-file stats index: the optimizer folds
+    * projections and filters of a local relation on the driver, so
+    * selecting from this frame and collecting it start no Spark job.
+    * `schema` is the files' data schema (no partition columns). `keep`
+    * sees each row as it is read, before the driver copies it: rows it
+    * drops are never held.
     */
   def driverParquet(spark: org.apache.spark.sql.SparkSession,
                     schema: org.apache.spark.sql.types.StructType,
@@ -46,20 +53,51 @@ object Internals {
                     keep: org.apache.spark.sql.catalyst.InternalRow => Boolean = _ => true)
   : DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import org.apache.spark.sql.execution.datasources.DataSourceUtils
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFooterReader, ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+    import org.apache.spark.sql.internal.SQLConf
     val cs = spark.asInstanceOf[classic.SparkSession]
-    val conf = cs.sessionState.newHadoopConf()
-    val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .buildReaderWithPartitionValues(cs, schema,
-        new org.apache.spark.sql.types.StructType(), schema, Nil,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    val sql = cs.sessionState.conf
+    val conf = hadoopConf(spark)
+    // the settings ParquetFileFormat's private setupHadoopConf gives its
+    // scan tasks; ParquetReadSupport and its schema converter read them
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, schema.json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
+    conf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key, sql.nestedSchemaPruningEnabled)
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sql.caseSensitiveAnalysis)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sql.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, sql.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sql.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sql.legacyParquetNanosAsLong)
+    conf.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      sql.parquetReaderRespectUnknownTypeAnnotation)
+    val options = new ParquetOptions(Map.empty[String, String], sql)
+    val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
     val rows = files.flatMap { f =>
       val path = new org.apache.hadoop.fs.Path(f)
-      val st = path.getFileSystem(conf).getFileStatus(path)
-      // the reader reuses its row object: copy each kept row out
-      read(PartitionedFile(InternalRow.empty, org.apache.spark.paths.SparkPath.fromPath(path),
-        0L, st.getLen, Array.empty, st.getModificationTime, st.getLen))
-        .filter(keep).map(_.copy()).toVector
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
+      val meta = ParquetFooterReader.readFooter(in,
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        .getFileMetaData.getKeyValueMetaData
+      val reader = new org.apache.parquet.hadoop.ParquetRecordReader[InternalRow](
+        new ParquetReadSupport(None, false,
+          DataSourceUtils.datetimeRebaseSpec(meta.get, options.datetimeRebaseModeInRead),
+          DataSourceUtils.int96RebaseSpec(meta.get, options.int96RebaseModeInRead)))
+      try {
+        reader.initialize(
+          new org.apache.hadoop.mapreduce.lib.input.FileSplit(path, 0L, in.getLength, Array.empty),
+          new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf,
+            new org.apache.hadoop.mapreduce.TaskAttemptID()))
+        // the reader reuses its row object: copy each kept row out
+        val kept = Vector.newBuilder[InternalRow]
+        while (reader.nextKeyValue()) {
+          val r = reader.getCurrentValue
+          if (keep(r)) kept += toUnsafe(r).copy()
+        }
+        kept.result()
+      } finally reader.close()
     }
     classic.Dataset.ofRows(cs, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
       org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema.toNullable), rows))

@@ -170,22 +170,14 @@ class GraftCatalogSpec extends SparkSpec {
     sql("""INSERT INTO graft.spec.stat_dim
            SELECT id AS grp, CAST(id AS STRING) AS name FROM range(0, 10)""")
 
-    // the logical stats a join planner sees = the pruned scan's file bytes,
+    // the logical stats a join planner sees = the pruned read's file bytes,
     // not defaultSizeInBytes (Long.Max = never broadcast)
-    val table = graftCatalog.loadTable(Identifier.of(Array("spec"), "stat_big"))
-      .asInstanceOf[GraftTable]
-    def scanBytes(filters: org.apache.spark.sql.sources.Filter*): Long = {
-      val b = table.newScanBuilder(CaseInsensitiveStringMap.empty())
-        .asInstanceOf[GraftScanBuilder]
-      b.pushFilters(filters.toArray)
-      b.build().asInstanceOf[GraftScan].estimateStatistics()
-        .sizeInBytes().getAsLong
-    }
-    val fullBytes = scanBytes()
-    val prunedBytes = scanBytes(EqualTo("id", 7L))
-    assert(fullBytes > 0L && fullBytes < Long.MaxValue)
-    assert(prunedBytes > 0L && prunedBytes < fullBytes,
-      s"pruned scan must report fewer bytes: $prunedBytes vs $fullBytes")
+    def planBytes(q: String): BigInt = sql(q).queryExecution.optimizedPlan.stats.sizeInBytes
+    val fullBytes = planBytes("SELECT * FROM graft.spec.stat_big")
+    val prunedBytes = planBytes("SELECT * FROM graft.spec.stat_big WHERE id = 7")
+    assert(fullBytes > 0 && fullBytes < Long.MaxValue)
+    assert(prunedBytes > 0 && prunedBytes < fullBytes,
+      s"pruned read must report fewer bytes: $prunedBytes vs $fullBytes")
     // and the planner actually uses them: the small dim side of a SQL join
     // broadcasts WITHOUT a hint
     val joined = sql("""SELECT d.name, SUM(b.v) AS sv
@@ -239,6 +231,66 @@ class GraftCatalogSpec extends SparkSpec {
     assert(sql("SELECT min(id) FROM graft.spec.rangedel WHERE price BETWEEN 0 AND 600")
       .head().getLong(0) === 50L)
     sql("DROP TABLE graft.spec.rangedel")
+  }
+
+  test("every catalog read runs as one Spark plan with the engine's answers") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.functions.col
+    def nodes(df: DataFrame): Seq[SparkPlan] =
+      df.queryExecution.sparkPlan.collectWithSubqueries { case p => p }
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    // three shapes of table state: merge-on-read deletes, a renamed
+    // column, a column added after the first commits
+    for ((t, evolve) <- Seq(
+        "one_del" -> s"DELETE FROM graft.spec.one_del WHERE id % 5 = 0",
+        "one_ren" -> s"ALTER TABLE graft.spec.one_ren RENAME COLUMN tag TO label",
+        "one_add" -> s"ALTER TABLE graft.spec.one_add ADD COLUMN note STRING")) {
+      sql(s"DROP TABLE IF EXISTS graft.spec.$t")
+      sql(s"""CREATE TABLE graft.spec.$t (id BIGINT, price BIGINT, tag STRING)
+              PARTITIONED BY (bucket(8, id))
+              TBLPROPERTIES ('graft.keys'='id', 'graft.statsCols'='price')""")
+      sql(s"INSERT INTO graft.spec.$t SELECT id, (id * 37) % 1000, CAST(id AS STRING) FROM range(400)")
+      val v1 = graftCatalog.tableFor(Identifier.of(Array("spec"), t)).currentVersion
+      sql(evolve)
+      // a changelog does not span a rename: read the changes after it
+      val v2 = graftCatalog.tableFor(Identifier.of(Array("spec"), t)).currentVersion
+      val more = if (t == "one_add") ", 'n'" else ""
+      sql(s"INSERT INTO graft.spec.$t SELECT id, (id * 37) % 1000, 'x'$more FROM range(400, 500)")
+      val kpt = graftCatalog.tableFor(Identifier.of(Array("spec"), t))
+      val cur = kpt.read()
+      val reads = Seq[(DataFrame, DataFrame, Boolean)](
+        (sql(s"SELECT * FROM graft.spec.$t WHERE id IN (3, 17, 410)"),
+          cur.filter(col("id").isin(3L, 17L, 410L)), true),
+        (sql(s"SELECT * FROM graft.spec.$t WHERE price BETWEEN 100 AND 299"),
+          cur.filter(col("price").between(100L, 299L)), true),
+        (sql(s"SELECT count(*) FROM graft.spec.$t VERSION AS OF $v1"),
+          spark.range(1).selectExpr(s"${kpt.readVersion(v1).count()}L"), true),
+        (spark.read.option("fromVersion", v2.toString).table(s"graft.spec.$t.changes"),
+          kpt.changefeedBetween(v2, kpt.currentVersion), false),
+        (sql(s"SELECT * FROM graft.spec.$t.history"), kpt.history(), false))
+      reads.foreach { case (got, want, tableRead) =>
+        val plan = nodes(got)
+        assert(!plan.exists(_.isInstanceOf[RowDataSourceScanExec]),
+          s"$t: a Row-bridged scan is left in\n${got.queryExecution.sparkPlan}")
+        if (tableRead) assert(plan.exists(_.isInstanceOf[FileSourceScanExec]),
+          s"$t: no parquet file scan in\n${got.queryExecution.sparkPlan}")
+        assert(rows(got) === rows(want), t)
+        assert(rows(got).nonEmpty, t)
+      }
+      // a self-join in one statement: two inlined reads of one table
+      val selfJoin = sql(s"""SELECT a.id, b.price FROM graft.spec.$t a
+                             JOIN graft.spec.$t b ON a.id = b.id + 1
+                             WHERE a.price BETWEEN 100 AND 299""")
+      assert(!nodes(selfJoin).exists(_.isInstanceOf[RowDataSourceScanExec]))
+      assert(rows(selfJoin) === rows(cur.filter(col("price").between(100L, 299L)).as("a")
+        .join(cur.as("b"), col("a.id") === col("b.id") + 1).select("a.id", "b.price")), t)
+      // the same read from a new session, whose catalog loads there
+      val other = spark.newSession().sql(s"SELECT * FROM graft.spec.$t WHERE id IN (3, 17, 410)")
+      assert(!nodes(other).exists(_.isInstanceOf[RowDataSourceScanExec]))
+      assert(rows(other) === rows(cur.filter(col("id").isin(3L, 17L, 410L))), t)
+      sql(s"DROP TABLE graft.spec.$t")
+    }
   }
 
   test("ALTER TABLE: add / rename / drop column and TBLPROPERTIES via SQL") {

@@ -1934,6 +1934,38 @@ class KeyedParquetTableSpec extends SparkSpec {
     }
   }
 
+  test("driverParquet reads the rows a Spark parquet scan reads") {
+    // the shapes a stats index holds: int bucket ids, long/double/string/
+    // decimal/date bounds, a binary bloom cell, and nulls in every column
+    val dir = tmpDir("driver_parquet") + "/ix"
+    spark.range(0, 50).selectExpr(
+      "IF(id % 7 = 0, NULL, CAST(id % 8 AS INT)) AS bucket",
+      "IF(id % 5 = 0, NULL, id * 1000000007L) AS mn",
+      "IF(id % 6 = 0, NULL, id / 3.0D) AS mx",
+      "IF(id % 4 = 0, NULL, concat('f', id, '.parquet')) AS file_path",
+      "IF(id % 9 = 0, NULL, CAST(id * 1.25 AS DECIMAL(12, 2))) AS price",
+      "IF(id % 8 = 0, NULL, date_add(DATE'1960-02-29', CAST(id * 400 AS INT))) AS day",
+      "IF(id % 3 = 0, NULL, unhex(sha2(CAST(id AS STRING), 256))) AS bloom")
+      .coalesce(1).write.parquet(dir)
+    val files = java.nio.file.Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".parquet")).toSeq
+    val spec = spark.read.parquet(dir)
+    def show(rs: Array[org.apache.spark.sql.Row]) = rs.map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }).toSeq.sortBy(_.toString)
+    val got = org.apache.spark.sql.graftbridge.Internals.driverParquet(spark, spec.schema, files)
+    assert(got.schema === spec.schema)
+    assert(show(got.collect()) === show(spec.collect()))
+    // a column subset, and `keep` seeing each row before it is copied
+    val sub = org.apache.spark.sql.types.StructType(spec.schema.filter(f =>
+      Set("bucket", "day", "bloom").contains(f.name)))
+    val kept = org.apache.spark.sql.graftbridge.Internals.driverParquet(spark, sub, files,
+      r => !r.isNullAt(0) && r.getInt(0) < 3)
+    assert(show(kept.collect()) ===
+      show(spec.select("bucket", "day", "bloom").filter("bucket < 3").collect()))
+  }
+
   test("scanParquet's footer schema is the schema Spark's inference gives") {
     import java.nio.file.Paths
     def same(t: KeyedParquetTable, sub: String*): Unit = {

@@ -197,9 +197,9 @@ private[catalog] object GraftProcedures {
           Seq(("drop_tag", s"tag '$tag' dropped"))
         }))
       // changelog-driven table-to-table replication as CALL text: one keyed
-      // merge of the source's net changes since from_version (final images
-      // read bucket-pruned; deletes propagate as 'd' rows) — the catch-up
-      // half of a rebucket/migration cutover, or plain replica maintenance
+      // merge of the source's changefeed since from_version (post-images as
+      // 'u' rows, deletes as 'd' rows) — the catch-up half of a
+      // rebucket/migration cutover, or plain replica maintenance
       case "sync_into" => Some(proc(name,
         Array(tableParam,
           ProcedureParameter.in("target", DataTypes.StringType)

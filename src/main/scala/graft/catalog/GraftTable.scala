@@ -463,7 +463,9 @@ final class GraftMetaTable(ident: String, frame: () => DataFrame)
   * [.option("toVersion", b)].table("graft.ns.t.changes")` plans
   * [[graft.cdc.KeyedParquetTable.changefeedBetween]] over (a, b] —
   * post-images for insert/update, PRE-images for delete, `_change_type`,
-  * image reads bucket-pruned to the changed keys. `toVersion` defaults to
+  * one keyed diff over the buckets whose files changed between the two
+  * versions, planned with no Spark job and cached nowhere (so the
+  * statement runs as one plan). `toVersion` defaults to
   * the current snapshot; a missing `fromVersion` refuses loudly (a change
   * stream without a start is ambiguous — plain SQL text can't carry scan
   * options, use the DataFrameReader form or VERSION AS OF reads).

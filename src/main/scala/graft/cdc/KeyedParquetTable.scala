@@ -547,25 +547,44 @@ final class KeyedParquetTable(
       .drop("__bucket")
   }
 
-  /** Changelog between two snapshots: one full-outer keyed join classifying
-    * every key that differs as insert / update / delete (any non-key column
-    * change counts as an update). Distributed — one shuffle on the key —
-    * and exact for any pair of retained versions; the merge-path analog of
-    * Iceberg's changelog read.
-    *
-    * BUCKET-DIFF scoped on bucketed tables: snapshot-incremental commits
-    * hard-link every untouched bucket's files into the new snapshot, so a
-    * bucket whose file-identity set (inode keys) is unchanged between the
-    * two versions provably holds byte-identical rows and cannot contribute
-    * a change — and layout pinning guarantees a key can never MOVE between
-    * buckets, so dropping identical buckets from BOTH join sides loses
-    * nothing. The fingerprint join then costs O(buckets touched between
-    * the versions), not O(table) — the shape an incremental changelog
-    * consumer needs on a table that grows forever. A compaction in the
-    * range rewrites inodes without changing rows; its buckets fall back
-    * into the join and simply produce no change rows (correct, unpruned).
+  /** Changelog between two snapshots: every key that differs, classified
+    * insert / update / delete (any non-key column change counts as an
+    * update). The keys and change types of [[changefeedBetween]] — one
+    * diff serves both, so the two can never disagree.
     */
-  def changesBetween(fromVersion: Long, toVersion: Long): DataFrame = {
+  def changesBetween(fromVersion: Long, toVersion: Long): DataFrame =
+    changefeedBetween(fromVersion, toVersion)
+      .select(keys.map(col) :+ col("_change_type").as("change_type"): _*)
+
+  /** Value-carrying changelog between two snapshots: insert/update rows
+    * carry their POST-image (at `toVersion`), delete rows their PRE-image
+    * (at `fromVersion`), each with a `_change_type` column. One row per key
+    * (the net effect over the range — an insert-then-delete inside the
+    * range is absent), which is exactly what a downstream replica `merge`
+    * wants: map insert/update→'u', delete→'d' and apply. The
+    * change-data-feed read of Delta/Iceberg, over the engine's snapshots.
+    *
+    * `fromVersion = -1` is the backfill batch: every row of `toVersion` as
+    * an insert (no diff run at all).
+    *
+    * Scale shape: one keyed [[diff]] over the buckets whose files changed
+    * between the versions. Snapshot-incremental commits hard-link every
+    * untouched bucket's files into the new snapshot, so a bucket whose
+    * file-identity set (inode keys) is unchanged provably holds
+    * byte-identical rows and cannot contribute a change — and layout
+    * pinning guarantees a key never MOVES between buckets, so dropping
+    * identical buckets from BOTH sides loses nothing. The diff reads each
+    * version's touched buckets once and costs O(buckets touched between
+    * the versions), not O(table); planning it starts no Spark job, and
+    * nothing is cached (a replay recomputes the same rows from the two
+    * immutable snapshots). A compaction in the range rewrites inodes
+    * without changing rows; its buckets fall back into the diff and simply
+    * produce no change rows (correct, unpruned). Unbucketed tables diff
+    * the full versions.
+    */
+  def changefeedBetween(fromVersion: Long, toVersion: Long): DataFrame = {
+    if (fromVersion == -1L)
+      return readVersion(toVersion).withColumn("_change_type", lit("insert"))
     // merge-on-read guard: the bucket-diff scoping below infers "unchanged
     // rows" from unchanged file identity, which a delete-set change breaks
     // (a deleteWhere commit hard-links every data file). With the SHARDED
@@ -613,10 +632,10 @@ final class KeyedParquetTable(
     // is a loud refusal (callers guard with snapshotHasFiles).
     val fromHas = snapshotHasFiles(fromVersion)
     val toHas = snapshotHasFiles(toVersion)
+    val range = s"changefeedBetween(v$fromVersion, v$toVersion) of $root"
     require(fromHas || toHas,
-      s"changesBetween(v$fromVersion, v$toVersion) of $root: both snapshots " +
-        "are file-less — no schema exists to type an (empty) change set; " +
-        "guard the call with snapshotHasFiles")
+      s"$range: both snapshots are file-less — no schema exists to type an " +
+        "(empty) change set; guard the call with snapshotHasFiles")
     val (a, b) =
       if (fromHas && toHas) scopedBuckets match {
         case Some(buckets) =>
@@ -625,124 +644,67 @@ final class KeyedParquetTable(
       }
       else if (toHas) { val bb = readVersion(toVersion); (bb.limit(0), bb) }
       else { val aa = readVersion(fromVersion); (aa, aa.limit(0)) }
-    val aCols = a.columns.filterNot(keys.contains).toSeq
-    val bCols = b.columns.filterNot(keys.contains).toSeq
-    // A range crossing a schema EVOLUTION diffs under the newer (to-side)
-    // schema — Iceberg/Delta CDC semantics. Additive evolution null-fills
-    // the old image (exactly what the evolved read shows for pre-evolution
-    // rows, so an untouched row is NOT a change); a dropped column stops
-    // participating. A non-subset difference (a rename: old name on one
-    // side, new on the other) still refuses — diffing it as drop+add would
-    // flag every row as updated.
-    val (a2, dataCols) =
-      if (aCols == bCols) {
-        // a range crossing a TYPE WIDENING ([[widenColumn]]) has identical
-        // names but narrower from-side types; fingerprinting the raw values
-        // would phantom-update every float/decimal row (cast-to-string of
-        // float 0.1 differs from its widened double). Cast the from side to
-        // the to side's types first — widening is value-preserving, so an
-        // untouched row fingerprints identically.
-        val bTypes = b.schema.map(x => x.name -> x.dataType).toMap
-        val drift = a.schema.exists(x => bTypes.get(x.name).exists(_ != x.dataType))
-        val aAligned =
-          if (!drift) a
-          else a.select(a.columns.map(c =>
-            a(c).cast(bTypes(c)).as(c)).toIndexedSeq: _*)
-        (aAligned, aCols)
+    diff(a, b, range)
+  }
+
+  /** The engine's one keyed diff: every key whose row differs between
+    * `before` and `after`, as the after-image (insert/update) or the
+    * before-image (delete) plus `_change_type`, in `after`'s columns and
+    * types. [[changefeedBetween]], [[changesBetween]], [[syncInto]] and
+    * [[reconcile]] all read their answer from it.
+    *
+    * One null-safe keyed full outer join carrying full rows — a NULL key is
+    * a legitimate key (merge matches it null-safely), so an unchanged
+    * NULL-keyed row is no change — and one projection that picks the
+    * after-image, or the before-image when the after side is absent.
+    *
+    * `before` is aligned to `after` first, under the newer schema
+    * (Iceberg/Delta CDC semantics): additive evolution null-fills the old
+    * image (exactly what the evolved read shows for pre-evolution rows, so
+    * an untouched row is NOT a change), a dropped column stops
+    * participating, and a widened column ([[widenColumn]]) is cast to its
+    * wider type (value-preserving, so an untouched float/decimal row does
+    * not phantom-update). A non-subset difference (a rename: old name on
+    * one side, new on the other) refuses — diffing it as drop+add would
+    * flag every row as updated. `what` names the diff in that refusal.
+    */
+  private def diff(before: DataFrame, after: DataFrame, what: String): DataFrame = {
+    val aCols = before.columns.filterNot(keys.contains).toSeq
+    val dataCols = after.columns.filterNot(keys.contains).toSeq
+    require(aCols.toSet.subsetOf(dataCols.toSet) || dataCols.toSet.subsetOf(aCols.toSet),
+      s"$what: data columns ${aCols.mkString("[", ",", "]")} vs " +
+        s"${dataCols.mkString("[", ",", "]")} differ non-additively (a rename?) — " +
+        "diff such snapshots explicitly")
+    val cols = after.columns.toSeq
+    val beforeTypes = before.schema.map(f => f.name -> f.dataType).toMap
+    val aligned = before.select(after.schema.fields.toSeq.map { f =>
+      beforeTypes.get(f.name) match {
+        case Some(t) if t == f.dataType => before(f.name)
+        case Some(_) => before(f.name).cast(f.dataType).as(f.name)
+        case None => lit(null).cast(f.dataType).as(f.name)
       }
-      else {
-        require(aCols.toSet.subsetOf(bCols.toSet) || bCols.toSet.subsetOf(aCols.toSet),
-          s"changesBetween(v$fromVersion, v$toVersion) of $root: data columns " +
-            s"${aCols.mkString("[", ",", "]")} vs ${bCols.mkString("[", ",", "]")} " +
-            "differ non-additively (a rename?) — diff such snapshots explicitly")
-        (alignColumns(a, b), bCols)
-      }
+    }: _*)
     // Unambiguous row encoding: each value is length-prefixed (so '#' inside
     // a value cannot shift field boundaries) and NULL gets its own marker
     // distinct from '' — then one xxhash64 over the joined encoding.
-    def enc(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    def enc(c: Column): Column = {
       val s = c.cast("string")
       when(c.isNull, lit("N")).otherwise(concat(length(s).cast("string"), lit(":"), s))
     }
-    def fp(df: DataFrame) = xxhash64(concat_ws("#", dataCols.map(c => enc(df(c))): _*))
-    // <=> keys + explicit presence flags: a NULL key is a legitimate key
-    // (merge matches it null-safely), and === plus key-IS-NULL classification
-    // would report an unchanged NULL-keyed row as a phantom insert+delete
-    val left = a2.select(keys.map(a2(_)) :+ fp(a2).as("__fa") :+ lit(true).as("__pa"): _*)
-    val right = b.select(keys.map(c => b(c).as(s"__r_$c")) :+ fp(b).as("__fb")
-      :+ lit(true).as("__pb"): _*)
-    val cond = keys.map(k => left(k) <=> right(s"__r_$k")).reduce(_ && _)
-    left.join(right, cond, "full_outer")
-      .withColumn("change_type",
-        when(col("__pa").isNull, "insert")
-          .when(col("__pb").isNull, "delete")
-          .when(col("__fa") =!= col("__fb"), "update"))
-      .filter(col("change_type").isNotNull)
-      .select(keys.map(k =>
-        when(col("__pb").isNotNull, col(s"__r_$k")).otherwise(left(k)).as(k))
-        :+ col("change_type"): _*)
+    def side(df: DataFrame, s: String): DataFrame = df.select(
+      cols.map(c => df(c).as(s"__${s}_$c")) :+
+        xxhash64(concat_ws("#", dataCols.map(c => enc(df(c))): _*)).as(s"__f$s") :+
+        lit(true).as(s"__p$s"): _*)
+    val l = side(aligned, "a")
+    val r = side(after, "b")
+    // explicit presence flags classify, never key-IS-NULL
+    l.join(r, keys.map(k => l(s"__a_$k") <=> r(s"__b_$k")).reduce(_ && _), "full_outer")
+      .select(cols.map(c => when(r("__pb").isNull, l(s"__a_$c"))
+          .otherwise(r(s"__b_$c")).as(c)) :+
+        when(l("__pa").isNull, "insert").when(r("__pb").isNull, "delete")
+          .when(l("__fa") =!= r("__fb"), "update").as("_change_type"): _*)
+      .filter(col("_change_type").isNotNull)
   }
-
-  /** Value-carrying changelog between two snapshots — [[changesBetween]]'s
-    * keys+classification joined back to full rows: insert/update rows carry
-    * their POST-image (read at `toVersion`), delete rows their PRE-image
-    * (read at `fromVersion`), each with a `_change_type` column. One row
-    * per key (the net effect over the range — an insert-then-delete inside
-    * the range is absent), which is exactly what a downstream replica
-    * `merge` wants: map insert/update→'u', delete→'d' and apply. The
-    * change-data-feed read of Delta/Iceberg, over the engine's snapshots.
-    *
-    * `fromVersion = -1` is the backfill batch: every row of `toVersion` as
-    * an insert (no diff run at all).
-    *
-    * Scale shape: one keyed diff ([[changesBetween]], bucket-diff pruned),
-    * then image reads BUCKET-PRUNED to the changed keys' buckets and joined
-    * on the key — O(changed buckets) I/O, never O(table), and the changed
-    * key set never lands on the driver (only its bucket ids do).
-    */
-  def changefeedBetween(fromVersion: Long, toVersion: Long): DataFrame = {
-    if (fromVersion == -1L)
-      return readVersion(toVersion).withColumn("_change_type", lit("insert"))
-    val ch = changesBetween(fromVersion, toVersion).localCheckpoint(true)
-    val chKeyed = ch.select(
-      keys.map(k => ch(k).as(s"__ck_$k")) :+ ch("change_type"): _*)
-    // one bucket probe shared by both image reads (post ∪ pre ⊆ ch's keys)
-    val bks = if (bucketCount > 0) Some(bucketsFor(ch.select(keys.map(col): _*)))
-              else None
-    def image(v: Long, types: Seq[String]): DataFrame = {
-      val side = chKeyed.filter(col("change_type").isin(types: _*))
-      val snap = bks match {
-        case Some(b) => readBuckets(b, v)
-        case None    => readVersion(v)
-      }
-      // <=> join: NULL keys are legitimate ([[changesBetween]] matched them
-      // null-safely; an === here would drop their change rows)
-      val cond = keys.map(k => snap(k) <=> side(s"__ck_$k")).reduce(_ && _)
-      snap.join(side, cond, "inner")
-        .select(snap.columns.map(snap(_)) :+ col("change_type").as("_change_type"): _*)
-    }
-    val post = image(toVersion, Seq("insert", "update"))
-    val pre = image(fromVersion, Seq("delete"))
-    // pre-images read under the FROM snapshot's schema; when the range
-    // crosses an evolution, align them to the to-side columns (nulls for
-    // added columns, dropped ones gone) so the feed presents ONE schema —
-    // the current one, like Delta/Iceberg CDC reads
-    post.unionByName(alignColumns(pre, post))
-  }
-
-  /** Project `df` to exactly `like`'s columns: shared columns by name,
-    * missing ones typed NULL — the one evolution-crossing alignment rule
-    * (shared by the keyed diff and the changefeed image union, so the two
-    * can never disagree on what "aligned" means).
-    */
-  private def alignColumns(df: DataFrame, like: DataFrame): DataFrame =
-    if (df.columns.sameElements(like.columns)) df
-    else {
-      val have = df.columns.toSet
-      df.select(like.columns.map(c =>
-        if (have.contains(c)) df(c)
-        else lit(null).cast(like.schema(c).dataType).as(c)).toIndexedSeq: _*)
-    }
 
   /** Commit a new snapshot containing exactly `df`. An optional `txn` id is
     * recorded INSIDE the snapshot directory before the pointer swings, so it
@@ -2374,14 +2336,15 @@ final class KeyedParquetTable(
     * [[rebucketTo]] staged cutover (rebucket at version v, keep writing
     * the source, then `syncInto(newTable, v)` before swapping roots).
     *
-    * Shape: [[changesBetween]] yields the changed KEYS (bucket-diff
-    * scoped — O(touched buckets), not O(table)); values for
-    * inserts/updates come from this table's CURRENT state via a
-    * bucket-pruned [[readForKeys]], so a key that changed five times
-    * replays its final image once (the replay is idempotent, and a
-    * second syncInto over the same range is a no-op merge). Deletes
-    * travel as `d` rows. One shuffle-joined filter, one merge — no
-    * driver materialization of the change set.
+    * Shape: [[changefeedBetween]] up to the current version (bucket-diff
+    * scoped — O(touched buckets), not O(table)) mapped to merge ops: a
+    * delete travels as a `d` row, anything else as a `u` row carrying its
+    * post-image, so a key that changed five times replays its final image
+    * once (the replay is idempotent). One bucket probe of the feed against
+    * the TARGET's layout (or an emptiness probe on an unbucketed target)
+    * skips the commit when nothing changed, then one merge — the feed is
+    * computed twice from the two immutable snapshots and never cached or
+    * collected.
     *
     * `fromVersion` must still be retained here (expireSnapshots prunes
     * the diff base — sync before expiring, like any changelog consumer).
@@ -2406,24 +2369,18 @@ final class KeyedParquetTable(
     // type the empty set from
     if (!snapshotHasFiles(fromVersion) && !snapshotHasFiles(toV))
       return target.currentVersion
-    val ch = changesBetween(fromVersion, toV).localCheckpoint(true)
-    if (ch.isEmpty) { ch.unpersist(false); return target.currentVersion }
-    val upKeys = ch.filter(col("change_type") =!= "delete")
-      .select(keys.map(k => col(k).as(s"__s_$k")): _*)
-    val cur = readForKeys(ch.filter(col("change_type") =!= "delete")
-      .select(keys.map(col): _*))
-    val cond = keys.map(k => cur(k) <=> upKeys(s"__s_$k")).reduce(_ && _)
-    val upserts = cur.join(upKeys, cond, "left_semi")
-      .withColumn("operation", lit("u"))
-    val nonKey = cur.schema.fields.filterNot(f => keys.contains(f.name))
-    val dels = nonKey.foldLeft(
-        ch.filter(col("change_type") === "delete").select(keys.map(col): _*)) {
-        (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType))
-      }
-      .select(cur.columns.map(col): _*)
-      .withColumn("operation", lit("d"))
-    target.merge(upserts.unionByName(dels), "operation", txn)
+    val ops = asMergeOps(changefeedBetween(fromVersion, toV))
+    val touched =
+      if (target.bucketCount > 0) Some(target.bucketsFor(ops)) else None
+    if (touched.fold(ops.isEmpty)(_.isEmpty)) target.currentVersion
+    else target.merge(ops, "operation", txn, touched)
   }
+
+  /** A [[diff]] result as [[merge]] ops: a delete becomes `d`, an insert or
+    * update `u` carrying its after-image. */
+  private def asMergeOps(feed: DataFrame): DataFrame =
+    feed.withColumn("operation", when(col("_change_type") === "delete", "d").otherwise("u"))
+      .drop("_change_type")
 
   /** Full-snapshot reconciliation — MERGE's "WHEN NOT MATCHED BY SOURCE
     * THEN DELETE" clause, i.e. make this table's live state EQUAL the
@@ -2432,13 +2389,13 @@ final class KeyedParquetTable(
     * you hold a complete current image, not a delta, and the table must
     * converge to it without rewriting 100 TB.
     *
-    * Shape: diff FIRST, merge the difference —
-    *   changed  = snapshot EXCEPT current      (new keys + changed rows)
-    *   missing  = current-keys ANTI snapshot   (rows to delete)
-    * so the commit touches only buckets holding an actual difference; an
-    * identical snapshot commits NOTHING (version unchanged). The two
-    * full-table scans are inherent to snapshot diffing (every engine's
-    * NOT-MATCHED-BY-SOURCE pays them — it's a full outer comparison); the
+    * Shape: diff FIRST, merge the difference — the keyed [[diff]] of the
+    * current state against the snapshot (cast to the table's types), the
+    * same null-safe full outer pass the changefeed runs, mapped to merge
+    * ops (a NULL key matches like any other), so the commit touches only
+    * buckets holding an actual difference; an identical snapshot commits
+    * NOTHING (version unchanged). The full-table comparison is inherent to
+    * snapshot diffing (every engine's NOT-MATCHED-BY-SOURCE pays it); the
     * win is on the WRITE side, where a 0.1%-drift snapshot rewrites 0.1%
     * of buckets, and on bucketed tables deletes ride the merge-on-read
     * set (zero rewrites for pure-delete drift).
@@ -2448,8 +2405,8 @@ final class KeyedParquetTable(
     */
   def reconcile(snapshot: DataFrame, txn: Option[String] = None): Long = {
     require(exists, s"reconcile target $root does not exist")
-    // pin the base FOR THE WHOLE statement: the except-diff, the anti-join
-    // and the final merge must all see one snapshot, and the merge must
+    // pin the base FOR THE WHOLE statement: the diff and the final merge
+    // must both see one snapshot, and the merge must
     // refuse if another writer committed in between — otherwise a racer's
     // insert after the diff was computed would survive "converge to
     // source" (never deleted) and its update could be silently kept.
@@ -2460,32 +2417,25 @@ final class KeyedParquetTable(
         s"table columns ${cur.columns.toSeq}")
     require(!cur.columns.contains("operation"),
       "reconcile needs the 'operation' column name free")
-    val cols = cur.columns.toSeq
-    // one materialization: the snapshot feeds the except, the anti join,
-    // and (via the union) the merge — same single-evaluation rule as
-    // mergeMor (a non-deterministic source must not diff against itself)
-    val snap = snapshot.select(cols.map(col): _*).localCheckpoint(true)
+    // one materialization: the snapshot feeds the duplicate check and the
+    // diff — same single-evaluation rule as mergeMor (a non-deterministic
+    // source must not diff against itself). Cast to the table's types, so
+    // the diff's alignment of the current state never narrows it.
+    val snap = snapshot.select(cur.schema.fields.toSeq.map(f =>
+      col(f.name).cast(f.dataType).as(f.name)): _*).localCheckpoint(true)
     // enforce the cardinality contract instead of just documenting it: a
     // duplicate-key snapshot would otherwise converge to an ARBITRARY one
-    // of the duplicates (except() dedups full rows, then the merge picks
-    // by ordering) — silent wrong state. One O(|snapshot|) aggregate.
+    // of the duplicates (the merge picks by ordering) — silent wrong
+    // state. One O(|snapshot|) aggregate.
     val dups = snap.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
       .select(keys.map(col): _*).limit(5).collect()
     require(dups.isEmpty,
       s"reconcile snapshot violates one-row-per-key: duplicate keys " +
         s"${dups.map(_.toString).mkString(", ")} (first 5 shown)")
-    val changed = snap.except(cur).withColumn("operation", lit("u"))
-    val nonKey = cur.schema.fields.filterNot(f => keys.contains(f.name))
-    val missing = nonKey.foldLeft(
-        cur.select(keys.map(col): _*)
-          .join(snap.select(keys.map(col): _*), keys, "left_anti")) {
-        (d, f) => d.withColumn(f.name, lit(null).cast(f.dataType))
-      }
-      .select(cols.map(col): _*)
-      .withColumn("operation", lit("d"))
     // materialize the diff once; an equal snapshot must NOT bump the version
-    val delta = changed.unionByName(missing).localCheckpoint(true)
+    val delta = asMergeOps(diff(cur, snap, s"reconcile of $root"))
+      .localCheckpoint(true)
     // the no-op probe must also verify the base hasn't moved: "equal to
     // the source" was established against `base`, not the current state
     if (delta.isEmpty) {
@@ -2515,8 +2465,7 @@ final class KeyedParquetTable(
     * invalidate every other live instance's cached layout. With a new root
     * the source stays readable AND writable until the caller cuts over, so
     * at scale this runs as a staged migration: rebucket, replay the delta
-    * (`changesBetween` from the rebucket's source version feeds
-    * [[merge]] on the new table), swap roots. Iceberg's bucket-spec
+    * ([[syncInto]] from the rebucket's source version), swap roots. Iceberg's bucket-spec
     * partition evolution is metadata-only but leaves old files under the
     * old spec — bucket-join co-location still requires exactly this
     * rewrite there too; the cost is the feature.

@@ -36,7 +36,7 @@ import graft.cdc.KeyedParquetTable
   *     loudly by default (a file diff would misreport rewritten rows as
   *     new) — `skipNonAppend=true` opts into dropping such snapshots from
   *     the stream, Iceberg's `streaming-skip-overwrite-snapshots`; a keyed
-  *     change stream with retractions is `changesBetween`'s job.
+  *     change stream with retractions is `mode=changelog`'s job.
   *   - `startVersion`: "latest" (default) tails only data committed after
   *     stream start; "earliest"/0 backfills the whole table through the
   *     SAME code path (snapshot v0..current as the first batches) then

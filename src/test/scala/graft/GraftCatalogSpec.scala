@@ -1191,8 +1191,39 @@ class GraftCatalogSpec extends SparkSpec {
         assert(jobsStartedBy(sql(q).queryExecution.executedPlan) === 0, s"planning: $q")
         assert(sql(q).collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq === want, q)
       }
+      // and so does a .changes read: the changefeed is one lazy plan
+      var changes: org.apache.spark.sql.DataFrame = null
+      assert(jobsStartedBy {
+        changes = spark.read.option("fromVersion", before.toString)
+          .table(s"graft.spec.$t.changes")
+        changes.queryExecution.executedPlan
+      } === 0, s"planning: $t.changes")
+      assert(changes.count() === 200L)
       sql(s"DROP TABLE graft.spec.$t")
     }
+  }
+
+  test("the changefeed, a .changes count and syncInto leave no cached blocks") {
+    sql("DROP TABLE IF EXISTS graft.spec.feed")
+    sql("""CREATE TABLE graft.spec.feed (id BIGINT, v BIGINT)
+           PARTITIONED BY (bucket(4, id)) TBLPROPERTIES ('graft.keys'='id')""")
+    sql("INSERT INTO graft.spec.feed SELECT id, id FROM range(100)")
+    val kpt = graftCatalog.tableFor(Identifier.of(Array("spec"), "feed"))
+    val v1 = kpt.currentVersion
+    val replica = kpt.rebucketTo(tmpDir("feed_replica"), 8)
+    sql("UPDATE graft.spec.feed SET v = v + 1000 WHERE id < 10")
+    sql("DELETE FROM graft.spec.feed WHERE id >= 95")
+    def cached: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = cached
+    assert(kpt.changefeedBetween(v1, kpt.currentVersion).count() === 15L)
+    assert(cached -- before === Set.empty[Int], "changefeedBetween")
+    assert(spark.read.option("fromVersion", v1.toString)
+      .table("graft.spec.feed.changes").count() === 15L)
+    assert(cached -- before === Set.empty[Int], ".changes count")
+    kpt.syncInto(replica, v1)
+    assert(cached -- before === Set.empty[Int], "syncInto")
+    assert(replica.read().collect().toSet === kpt.read().collect().toSet)
+    sql("DROP TABLE graft.spec.feed")
   }
 
   test("COUNT(col) pushdown: nl_ null counts answer scan-free; stale/debt/decimal shapes decline") {

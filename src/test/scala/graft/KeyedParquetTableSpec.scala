@@ -178,6 +178,27 @@ class KeyedParquetTableSpec extends SparkSpec {
         }
       }.toMap
       assert(got === want, s"seed=$seed")
+      // against a driver-side fold of the two versions' rows: the feed
+      // carries the post-image of an insert/update and the pre-image of a
+      // delete, and changesBetween is exactly the feed's keys and types
+      def image(v: Long) = t.readVersion(v).collect()
+        .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
+      val (i1, i2) = (image(v1), image(t.currentVersion))
+      val fold = (i1.keySet ++ i2.keySet).toSeq.sorted.flatMap { id =>
+        (i1.get(id), i2.get(id)) match {
+          case (None, Some(y)) => Some((id, y._1, y._2, "insert"))
+          case (Some(x), None) => Some((id, x._1, x._2, "delete"))
+          case (Some(x), Some(y)) if x != y => Some((id, y._1, y._2, "update"))
+          case _ => None
+        }
+      }
+      val feed = t.changefeedBetween(v1, t.currentVersion).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
+        .sortBy(_._1).toSeq
+      assert(feed === fold, s"seed=$seed feed")
+      assert(t.changesBetween(v1, t.currentVersion).collect()
+        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+        === feed.map(r => (r._1, r._4)), s"seed=$seed keys")
     }
   }
 

@@ -131,6 +131,33 @@ class ReconcileSpec extends SparkSpec {
     }
   }
 
+  test("NULL-keyed rows: an identical image commits nothing, a changed value converges") {
+    for (buckets <- Seq(4, 0)) {
+      val t = new KeyedParquetTable(spark, tmpDir(s"kpt_reconcile_nullkey$buckets"),
+        Seq("id"), Nil, buckets)
+      val rows = (Option.empty[Long], "nul", 0.5) +:
+        (1L to 20L).map(i => (Option(i), s"v$i", i * 1.0))
+      def live = t.read().collect().map(r =>
+        (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1), r.getDouble(2))).toSet
+      t.commit(rows.toDF("id", "v", "score"))
+      val v = t.currentVersion
+      // merge matches a NULL key null-safely, so the diff must too: the
+      // identical image is no change, not a delete of the NULL-keyed row
+      t.reconcile(rows.toDF("id", "v", "score"))
+      assert(t.currentVersion === v, s"buckets=$buckets")
+      assert(live === rows.toSet, s"buckets=$buckets")
+      val changed = rows.map {
+        case (None, _, _) => (Option.empty[Long], "changed", 9.0)
+        case r => r
+      }
+      t.reconcile(changed.toDF("id", "v", "score"))
+      assert(live === changed.toSet, s"buckets=$buckets")
+      val w = t.currentVersion
+      t.reconcile(changed.toDF("id", "v", "score"))
+      assert(t.currentVersion === w, s"buckets=$buckets")
+    }
+  }
+
   test("column mismatch raises") {
     val t = freshTable("kpt_reconcile_cols")
     intercept[IllegalArgumentException] {
